@@ -79,16 +79,21 @@ object Bench {
       System.gc()
     }
 
+    // A failed run is its cause, never a time: the time-to-exception of a
+    // query that threw is not a sample of that query.
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Double = {
+                dir: String): Either[String, Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, dir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val r =
+        try {
+          fn(spark, dir).write.mode("overwrite").format("noop").save()
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          Left(e.toString)
+        }
       settle()
-      dt
+      r
     }
 
     def median(xs: Seq[Double]): Double = {
@@ -122,14 +127,24 @@ object Bench {
     selected.foreach { case (n, fn) => runOnce(n, fn, "/root/testdata/sf0.001") }
 
     val loadStart = loadavg()
+    // the first failing repeat ends a query's measurement
     val results = selected.map { case (name, fn) =>
-      name -> median((1 to repeats).map(_ => runOnce(name, fn, sfDir)))
+      name -> (1 to repeats).foldLeft[Either[String, Seq[Double]]](Right(Nil)) {
+        case (Right(ts), _) => runOnce(name, fn, sfDir).map(ts :+ _)
+        case (failed, _)    => failed
+      }.map(median)
     }
     val loadEnd = loadavg()
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val common64 = results.collect { case (k, v) if Common64(k) => v }.sum
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val qs = results.map {
+      case (k, Right(v))    => "\"" + k + "\":" + v
+      case (k, Left(cause)) => "\"" + k + "\":{\"failed\":" + json.writeValueAsString(cause) + "}"
+    }.mkString("{", ",", "}")
+    // failed queries are named in `queries` and left out of every sum
+    val timed = results.collect { case (k, Right(v)) => k -> v }
+    val nFailed = results.size - timed.size
+    val total = timed.map(_._2).sum
+    val common64 = timed.collect { case (k, v) if Common64(k) => v }.sum
     // Memoized-asset build costs (round-11 verdict #2): each asset is
     // built once per JVM inside the FIRST repeat's timer and amortized by
     // every later consumer, so the per-query medians report probe time.
@@ -151,7 +166,7 @@ object Bench {
     // driver's bounded stdout-tail capture truncates it; this trailing
     // line carries the headline numbers in under 200 bytes. The full
     // line and bench.json are unchanged in shape — this is additive.
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"common64_s":$common64,"assets_sum_s":$assetsSum,"value_plus_assets":${total + assetsSum},"sf":"$sfDir","cpus":"$cpus"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"common64_s":$common64,"assets_sum_s":$assetsSum,"value_plus_assets":${total + assetsSum},"sf":"$sfDir","cpus":"$cpus"}""")
     // sbt wraps stdout in [info] tags, which breaks machine parsing of the
     // metric line — mirror it to a plain file the driver can read directly.
     // A BENCH_ONLY-restricted run writes a suffixed file by default so a

@@ -49,7 +49,7 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     tune(spark)
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events")
         // Normalize events.ts to TimestampType regardless of how the testdata
         // generation wrote it. The session tz is UTC, so the NTZ→LTZ cast is a
@@ -63,6 +63,49 @@ object Tables {
           case _                => df
         }
     else df
+  }
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
+
+  /** path -> (fingerprint, inferred schema); a miss replaces the path's entry. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]
+
+  /** `spark.read.parquet(path)` that infers each path's schema once.
+    *
+    * A schema-less parquet read runs a Spark job to read the footers
+    * (`SchemaMergeUtils.mergeSchemasInParallel`) on every call. This reads
+    * with the schema remembered from the last inference while the path's
+    * fingerprint — every file's name, length and modification time under
+    * it, plus the confs that change inference — is unchanged, so a warm
+    * read lists the files and runs no job. A directory Spark rewrites gets
+    * new part-file names and a file rewritten in place a new length or
+    * mtime, so either re-infers. Inference runs outside any lock: two
+    * concurrent first reads may both infer, which is harmless. A missing
+    * path goes to the plain read, so Spark's own error is unchanged. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return spark.read.parquet(path)
+    val files = fs.listFiles(p, true)
+    val entries = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val f = files.next()
+      entries += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
+    }
+    val fp = (entries.result().sorted ++
+      inferenceConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString("\n")
+    schemas.get(path) match {
+      case (`fp`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(path, (fp, df.schema))
+        df
+    }
   }
 
   /** [[load]] + the scale-adaptive scan [[fanout]] below — OPT-IN per call

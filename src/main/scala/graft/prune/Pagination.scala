@@ -1,6 +1,7 @@
 package graft.prune
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
@@ -71,7 +72,7 @@ object Pagination {
       sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
       sorted.schema.add(IdxCol, LongType, nullable = false))
     indexed.write.mode(SaveMode.Overwrite).parquet(destDir)
-    val total = spark.read.parquet(destDir).count() // once; metadata-only scan
+    val total = Tables.parquet(spark, destDir).count() // once; metadata-only scan
     pageAt(spark, Token(destDir, 0L, pageSize, total))
   }
 
@@ -91,7 +92,7 @@ object Pagination {
       query.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
       query.schema.add(IdxCol, LongType, nullable = false))
     indexed.write.mode(SaveMode.Overwrite).parquet(destDir)
-    val total = spark.read.parquet(destDir).count() // once; metadata-only scan
+    val total = Tables.parquet(spark, destDir).count() // once; metadata-only scan
     pageAt(spark, Token(destDir, 0L, pageSize, total))
   }
 
@@ -141,7 +142,7 @@ object Pagination {
   }
 
   private def pageAt(spark: SparkSession, t: Token): Page = {
-    val rows = spark.read.parquet(t.path)
+    val rows = Tables.parquet(spark, t.path)
       .filter(col(IdxCol) >= t.offset && col(IdxCol) < t.offset + t.pageSize)
       .orderBy(col(IdxCol)) // tiny: at most pageSize rows survive the pushdown
       .drop(IdxCol)

@@ -86,7 +86,7 @@ object Dedup {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** (doc_id, g, sz, r): the PPJoin PREFIX INDEX at τ = 1/2 — each doc's
@@ -107,7 +107,7 @@ object Dedup {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** One full prefix-index build (the path [[prefixIndex]] amortizes). */
@@ -282,7 +282,7 @@ object Dedup {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** The corpus LSH BAND INDEX — the distinct (band, bv) buckets of the
@@ -303,7 +303,7 @@ object Dedup {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** MinHash signatures of an arbitrary (doc_id, text) frame — the SAME
@@ -470,7 +470,7 @@ object Dedup {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** One full labeling build (the expensive path [[labeledDocs]] amortizes).

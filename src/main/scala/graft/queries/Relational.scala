@@ -945,21 +945,21 @@ object Relational {
         // the distinct node list is index state too (r15): every rank
         // invocation re-ran a distinct over 2·|edges| endpoint rows to
         // seed the rank table — derived once here instead
-        val e = s.read.parquet(s"$out/edges")
+        val e = Tables.parquet(s, s"$out/edges")
         e.select(col("src").as("node"))
           .union(e.select(col("dst").as("node"))).distinct()
           .coalesce(1).write.mode("overwrite").parquet(s"$out/nodes")
         out
       })
     }
-    s.read.parquet(s"$path/edges")
+    Tables.parquet(s, s"$path/edges")
   }
 
   /** The edge list's distinct endpoints — built alongside the edge asset
     * (same temp root, same sweep); see the build comment above. */
   private def purchaseNodes(s: SparkSession, d: String): DataFrame = {
     purchaseEdges(s, d) // ensure the asset root exists
-    s.read.parquet(s"${peCache(d)}/nodes")
+    Tables.parquet(s, s"${peCache(d)}/nodes")
   }
 
   private val unionBase =

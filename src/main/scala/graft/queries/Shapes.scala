@@ -64,7 +64,7 @@ object Shapes {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** ONE SQL text, TWO engines: this exact string is executed by Spark

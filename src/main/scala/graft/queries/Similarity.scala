@@ -339,14 +339,26 @@ object Similarity {
   private val graphQueryCache =
     scala.collection.concurrent.TrieMap.empty[String, (Array[Long], Long, Long)]
 
+  // Every asset temp dir is registered when it is CREATED, before its
+  // write job launches, so a build that fails mid-write still gets its
+  // partial output swept at JVM exit (the Relational.peTempDirs idiom).
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  private def assetDir(prefix: String): String = {
+    val out = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(out)
+    out
+  }
+
   private val pairSweeper: Unit = sys.addShutdownHook {
-    (pairCache.values ++ nbrCache.values ++ nndCache.values ++
-      graphEdgeCache.values).foreach { p =>
+    tempDirs.forEach { p =>
       try {
         val root = java.nio.file.Paths.get(p)
         if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
+          scala.util.Using.resource(java.nio.file.Files.walk(root)) { w =>
+            w.sorted(java.util.Comparator.reverseOrder())
+              .forEach(f => java.nio.file.Files.deleteIfExists(f))
+          }
       } catch { case _: Throwable => () }
     }
   }
@@ -354,12 +366,12 @@ object Similarity {
   private[graft] def exactPairs(s: SparkSession, d: String): DataFrame = {
     val path = pairCache.synchronized {
       pairCache.getOrElseUpdate(d, graft.Assets.timed("exact_pairs") {
-        val out = java.nio.file.Files.createTempDirectory("graft-exactpairs").toString
+        val out = assetDir("graft-exactpairs")
         computeExactPairs(s, d).write.mode("overwrite").parquet(out)
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** One full neighbor-table build (the path [[neighborTable]] amortizes) —
@@ -371,12 +383,12 @@ object Similarity {
   private[graft] def neighborTable(s: SparkSession, d: String): DataFrame = {
     val path = nbrCache.synchronized {
       nbrCache.getOrElseUpdate(d, graft.Assets.timed("knn_neighbors") {
-        val out = java.nio.file.Files.createTempDirectory("graft-knnnbrs").toString
+        val out = assetDir("graft-knnnbrs")
         computeNeighbors(s, d).write.mode("overwrite").parquet(out)
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** ANN-BUILT proximity graph (the NN-descent shape, Dong et al.
@@ -427,7 +439,7 @@ object Similarity {
     val planes = planesFor(s, d)
     nndCache.synchronized {
       nndCache.getOrElseUpdate(s"$d|p=$planes", graft.Assets.timed("nnd_neighbors") {
-        val out = java.nio.file.Files.createTempDirectory("graft-nndnbrs").toString
+        val out = assetDir("graft-nndnbrs")
         // the build persists its double-consumed intermediates; sweep
         // exactly those (and nothing a consumer query holds) once the
         // asset parquet is on disk
@@ -442,7 +454,7 @@ object Similarity {
   }
 
   private[graft] def nndNeighborTable(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(nndNeighborPath(s, d))
+    Tables.parquet(s, nndNeighborPath(s, d))
 
   /** Memoized parquet path of the symmetrized graph-ANN adjacency (see
     * [[graphEdgeCache]]) — built in the PARENT session (full width), read
@@ -458,8 +470,8 @@ object Similarity {
     graphEdgeCache.synchronized {
       graphEdgeCache.getOrElseUpdate(s"$d|p=$planes",
         graft.Assets.timed("ann_graph_edges") {
-          val out = java.nio.file.Files.createTempDirectory("graft-gedges").toString
-          val fwd = s.read.parquet(nndPath)
+          val out = assetDir("graft-gedges")
+          val fwd = Tables.parquet(s, nndPath)
             .filter(col("vec_id") =!= 0 && col("nbr_id") =!= 0)
             .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
           fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
@@ -1118,7 +1130,7 @@ object Similarity {
         case Some(id) => loopS.range(1).select(lit(id).as("vec_id"))
         case None     => loopS.range(0).select(col("id").as("vec_id"))
       }
-      val edges = loopS.read.parquet(graphEdgePath(s, d))
+      val edges = Tables.parquet(loopS, graphEdgePath(s, d))
         .persist(MEMORY_AND_DISK)
       val vecs = intVecs(loopS, d).select(col("vec_id"), col("v"), col("nv"))
         .persist(MEMORY_AND_DISK)

@@ -86,7 +86,7 @@ object Sources {
             Seq("l_partkey", "l_suppkey", "l_orderkey"), numFiles = 64)
           .write.mode("overwrite").parquet(b)
       }
-      s.read.parquet(base)
+      Tables.parquet(s, base)
         .filter(col("l_partkey") <= 200 && col("l_suppkey") <= 40)
         .groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("n"), Num.dsum(col("l_extendedprice")).as("rev"))

@@ -257,7 +257,7 @@ object TextOps {
         out
       })
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** One full train+score build (the path [[docPerplexity]] amortizes). */

@@ -61,7 +61,7 @@ object MediaStream {
           out
         })
     }
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
   }
 
   /** Batch-local screen: ids dropped by the min-id keep rule — the

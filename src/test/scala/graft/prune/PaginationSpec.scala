@@ -45,6 +45,25 @@ class PaginationSpec extends SparkSpec {
     assert(!plan.contains("GlobalLimit"), plan)
   }
 
+  test("two firstPage calls on the same destDir each page their own rows") {
+    val dest = tmpDir("pagere") + "/dest"
+    val a = (1 to 6).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    val a0 = Pagination.firstPage(a, Seq("id"), 4, dest)
+    assert(a0.rows.as[(Long, String)].collect().toSeq ==
+      (1 to 4).map(i => (i.toLong, s"v$i")))
+    val a1 = Pagination.nextPage(spark, a0.nextToken.get)
+    assert(a1.rows.as[(Long, String)].collect().toSeq == Seq((5L, "v5"), (6L, "v6")))
+
+    // different rows AND a different schema over the same destination
+    val b = (101 to 105).map(i => (i.toLong, i * 0.5)).toDF("id", "w")
+    val b0 = Pagination.firstPage(b, Seq("id"), 4, dest)
+    assert(b0.rows.columns.toSeq == Seq("id", "w"))
+    assert(b0.rows.as[(Long, Double)].collect().map(_._1).toSeq == (101L to 104L))
+    val b1 = Pagination.nextPage(spark, b0.nextToken.get)
+    assert(b1.rows.as[(Long, Double)].collect().toSeq == Seq((105L, 52.5)))
+    assert(b1.nextToken.isEmpty)
+  }
+
   test("tokens are jackson-encoded: paths with JSON-hostile characters survive") {
     val df = (1 to 6).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     // JSON-hostile (quote, comma, colon) but Hadoop-glob-safe characters

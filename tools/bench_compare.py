@@ -4,7 +4,8 @@
 Usage: bench_compare.py OLD.json NEW.json [--threshold 1.5]
 
 Flags queries slower than threshold× the old time (ignoring sub-100ms
-noise), lists new/removed queries, and prints totals.
+noise) and queries that failed in NEW, lists new/removed queries, and
+prints totals.
 """
 import argparse
 import json
@@ -42,10 +43,14 @@ def main() -> int:
     args = ap.parse_args()
 
     old, new = load(args.old), load(args.new)
-    oq, nq = old["queries"], new["queries"]
+    # a failed query is recorded as {"failed": cause}, not a time
+    failed = {q: v["failed"] for q, v in new["queries"].items()
+              if isinstance(v, dict)}
+    oq = {q: v for q, v in old["queries"].items() if not isinstance(v, dict)}
+    nq = {q: v for q, v in new["queries"].items() if not isinstance(v, dict)}
 
     added = sorted(set(nq) - set(oq))
-    removed = sorted(set(oq) - set(nq))
+    removed = sorted(set(oq) - set(nq) - set(failed))
     regressions = []
     for name in sorted(set(oq) & set(nq)):
         o, n = oq[name], nq[name]
@@ -61,6 +66,10 @@ def main() -> int:
               ", ".join(f"{q}={nq[q]:.2f}s" for q in added))
     if removed:
         print(f"removed ({len(removed)}): {', '.join(removed)}")
+    if failed:
+        print(f"FAILED ({len(failed)}):")
+        for name in sorted(failed):
+            print(f"  {name}: {failed[name]}")
     if regressions:
         print(f"REGRESSIONS (> {args.threshold}x):")
         for name, o, n, r in sorted(regressions, key=lambda x: -x[3]):
@@ -72,7 +81,7 @@ def main() -> int:
         ot = sum(oq[q] for q in comparable)
         nt = sum(nq[q] for q in comparable)
         print(f"comparable-set total: {ot:.2f}s -> {nt:.2f}s ({nt/ot:.2f}x)")
-    return 1 if regressions else 0
+    return 1 if regressions or failed else 0
 
 
 if __name__ == "__main__":
