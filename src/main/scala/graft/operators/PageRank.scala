@@ -3,21 +3,33 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
-/** Damped PageRank over a directed edge list, iterated with the
-  * [[Graph.connectedComponents]] loop discipline (truncate-per-round plan
-  * cutting, freed superseded rounds, loop-scoped child-session tuning) and
-  * the [[KMeans.trainConverged]] fixed-point stop: mass is FIXED-POINT
-  * integer (1e6 per node, damping 85/100 as integer ops — the
-  * q_pagerank_iter convention), so "converged" is exact rank equality, not
-  * a float tolerance, and every round is bit-deterministic in any engine
-  * and any partition order.
+/** Damped PageRank over a directed edge list. Mass is FIXED-POINT integer
+  * (1e6 per node, damping 85/100 as integer ops — the q_pagerank_iter
+  * convention), so every round is bit-deterministic in any engine and any
+  * partition order, and "converged" is exact rank equality, not a float
+  * tolerance.
+  *
+  * Two drivers share one round:
+  *   - [[ranks]] / [[ranksPersonalized]] (FIXED round count) return ONE
+  *     lazy plan in the caller's session: no cloned session, no persist,
+  *     no action. Each round reads its predecessor's ranks ONCE — `node`
+  *     and `is_seed` never change after the start, so every round takes
+  *     them from the static flagged node table instead of from the
+  *     previous round — so the plan grows linearly in the round count and
+  *     needs no truncation. The caller's action runs the whole loop, and
+  *     ReuseExchange shares the edge and node exchanges across rounds.
+  *   - [[trainConverged]] (unbounded rounds, each inspected for the fixed
+  *     point) keeps the [[Graph.connectedComponents]] loop discipline:
+  *     per-round truncation in a loop-scoped child session, freed
+  *     superseded rounds, and the [[KMeans.trainConverged]] stop.
   *
   * Per-round shape (each shuffle key-bounded, nothing quadratic):
   *   - contributions: degree-widened edges ⋈ ranks on `src` (fanout =
-  *     edge count; out-degrees are joined into the edge relation ONCE
-  *     before the loop), integer `rank div deg` per edge;
+  *     edge count; out-degrees are joined into the edge relation ONCE,
+  *     outside the rounds), integer `rank div deg` per edge;
   *   - inflow: one dst-keyed integer sum (map-side combined);
   *   - next ranks: node table LEFT JOIN inflow — nodes without inflow
   *     (sources) settle at the teleport mass 150000 after round 1.
@@ -32,64 +44,53 @@ object PageRank {
 
   /** Ranks after EXACTLY `iters` damped rounds from the uniform 1e6 start —
     * the SQL-oracle-expressible variant (k chained CTE rounds); returns
-    * (node, rank_fp). */
+    * (node, rank_fp) as a lazy plan: building it runs no Spark job.
+    *
+    * @param edges either bare `(src, dst)` edges, or PREPARED edges
+    *        `(src, dst, deg)` whose integral `deg` is the count of edge rows
+    *        sharing the row's `src` (the out-degree the operator would
+    *        otherwise join in) — what a materialized link-graph asset
+    *        carries. A third column named `deg` of any other type is
+    *        rejected with IllegalArgumentException.
+    * @param nodes optional PREPARED node list (one `node` column) that must
+    *        equal the distinct endpoints of `edges`; skips the distinct over
+    *        2·|edges| endpoint rows. */
   def ranks(edges: DataFrame, iters: Int,
-            nodes: Option[DataFrame] = None): DataFrame = {
-    require(iters >= 1, "at least one PageRank round")
-    run(edges, iters, convergeStop = false, nodesPre = nodes)._1
-  }
+            nodes: Option[DataFrame] = None): DataFrame =
+    fixedRounds(edges, iters, None, nodes)
 
   /** PERSONALIZED ranks: teleport mass lands only on `seeds` (one `node`
     * column) and the start mass is 1e6 on seeds, 0 elsewhere — authority
     * RELATIVE to a trusted set (the curation question "which nodes do my
     * vetted sources endorse", vs the global variant's "which nodes does
-    * the whole graph endorse"). Same loop, same integer fixed-point
-    * arithmetic: the standard variant IS this one with every node a
-    * seed, so the seed flag is carried through the rank state and costs
-    * one boolean per node. Non-seed nodes unreachable from any seed
-    * settle at exactly 0. */
+    * the whole graph endorse"). Same rounds, same integer fixed-point
+    * arithmetic: the standard variant IS this one with every node a seed.
+    * Non-seed nodes unreachable from any seed settle at exactly 0.
+    * `edges` and `nodes` follow the contract of [[ranks]]; the result is
+    * a lazy plan. */
   def ranksPersonalized(edges: DataFrame, seeds: DataFrame, iters: Int,
-                        nodes: Option[DataFrame] = None): DataFrame = {
-    require(iters >= 1, "at least one PageRank round")
-    run(edges, iters, convergeStop = false, seeds = Some(seeds),
-      nodesPre = nodes)._1
-  }
+                        nodes: Option[DataFrame] = None): DataFrame =
+    fixedRounds(edges, iters, Some(seeds), nodes)
 
   /** Iterate to the EXACT integer fixed point (ranks stop changing).
     * Returns (ranks, roundsRun) — roundsRun includes the final no-change
     * round that proved convergence. Hitting `maxIters` THROWS: silently
     * returning non-fixed-point ranks would let a truncated authority
-    * signal leak into downstream quality gates unlabeled.
+    * signal leak into downstream quality gates unlabeled. Runs eagerly.
     *
     * @param checkpointDir as in [[Graph.connectedComponents]]: when set,
     *        loop state is reliably checkpointed there (executor-loss
     *        tolerance on a real cluster); same context-global caveat —
     *        concurrent invocations must pass the same dir. */
   def trainConverged(edges: DataFrame, maxIters: Int = 100,
-                     checkpointDir: Option[String] = None): (DataFrame, Int) =
-    run(edges, maxIters, convergeStop = true, checkpointDir)
-
-  /** @param nodesPre optional PREPARED node list (one `node` column, the
-    *        distinct endpoints of `edges0`) — index state a materialized
-    *        link-graph asset carries, skipping the per-invocation distinct
-    *        over 2·|edges| endpoint rows. Must equal that distinct set. */
-  private def run(edges0: DataFrame, maxIters: Int, convergeStop: Boolean,
-                  checkpointDir: Option[String] = None,
-                  seeds: Option[DataFrame] = None,
-                  nodesPre: Option[DataFrame] = None): (DataFrame, Int) = {
-    val s = edges0.sparkSession
-    // PREPARED-EDGES fast path (r15): a caller whose edge relation already
-    // carries each edge's src out-degree as a third column `deg` (the
-    // count of edge rows per src — exactly what the widening below would
-    // compute) skips the in-operator degree aggregate + join. The widened
-    // relation is as deterministic as the edge list, so pipelines that
-    // materialize their link graph as an asset widen it once at build.
-    val hasDeg = edges0.columns.length == 3 && edges0.columns.last == "deg"
+                     checkpointDir: Option[String] = None): (DataFrame, Int) = {
+    val s = edges.sparkSession
+    val hasDeg = prepared(edges)
     // The prepared path's contract is a MATERIALIZED relation (an asset
     // table), so re-scanning it is cheap by construction and the guard
     // persist below would only add a full disk write of the edge list.
-    val pairs = if (hasDeg) edges0.toDF("src", "dst", "deg")
-    else edges0.toDF("src", "dst").persist(StorageLevel.DISK_ONLY)
+    val pairs = if (hasDeg) edges.toDF("src", "dst", "deg")
+    else edges.toDF("src", "dst").persist(StorageLevel.DISK_ONLY)
     val loopS = s.newSession()
     checkpointDir.foreach(s.sparkContext.setCheckpointDir)
     // Plan truncation with a directly held RDD handle — the Graph.truncate
@@ -111,10 +112,8 @@ object PageRank {
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       }
     }
-    var edges: DataFrame = null
-    var deg: DataFrame = null
+    var wide: DataFrame = null
     var lastRdd: RDD[Row] = null
-    var lastSchema: org.apache.spark.sql.types.StructType = null
     try {
       val nEdges = pairs.count()
       val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -124,135 +123,108 @@ object PageRank {
       loopS.conf.set("spark.sql.adaptive.enabled", "false")
       // Edges pre-partitioned on the join key (src) once, then WIDENED by
       // their out-degree once — the (src, dst, deg) relation every round's
-      // contribution join probes. Joining deg inside the loop instead
-      // would repeat that node-sized join every round; hoisted here it is
-      // paid once, and the per-round work drops to rank-join + two
-      // aggregates. 8 bytes/row wider than the bare edge list — free at
-      // any scale next to a per-round shuffle.
-      //
-      // r15: the former intermediate `bare` persist and the post-join
-      // re-repartition are gone — `bare` appears twice in the ONE edges
-      // plan (the aggregate and the join probe), but both references share
-      // the identical repartition exchange (ReuseExchange dedups it, so
-      // the feeder RDD is scanned once), and the src-keyed join already
-      // emits hashpartitioning(src, loopParts), making a further
-      // repartition a no-op exchange. One persist layer and one exchange
-      // fewer per invocation, same materialized relation.
+      // contribution join probes, paid once instead of once per round.
+      // `bare` appears twice in the widening (the aggregate and the join
+      // probe), but both references share the identical repartition
+      // exchange (ReuseExchange dedups it, so the feeder RDD is scanned
+      // once), and the src-keyed join already emits
+      // hashpartitioning(src, loopParts).
       val bare = loopS.createDataFrame(pairs.rdd, pairs.schema)
         .repartition(loopParts, col("src"))
-      edges =
-        (if (hasDeg) bare
-         else {
-           deg = bare.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-           bare.join(deg, "src")
-         }).persist(StorageLevel.MEMORY_AND_DISK)
-      edges.count() // edges-with-deg materialized; feeder handles are dead weight
+      wide = widened(bare).persist(StorageLevel.MEMORY_AND_DISK)
+      wide.count() // edges-with-deg materialized; feeder handles are dead weight
       pairs.unpersist(blocking = false)
-      val nodes = nodesPre match {
-        case Some(n) =>
-          val sel = n.select(col("node"))
-          loopS.createDataFrame(sel.rdd, sel.schema)
-        case None => edges.select(col("src").as("node"))
-          .union(edges.select(col("dst").as("node"))).distinct()
+      val ranksInit = endpoints(wide)
+        .select(col("node"), lit(1000000L).as("rank_fp"), lit(true).as("is_seed"))
+      val (ranks0, rdd0) = truncate(ranksInit)
+      var ranks = ranks0
+      lastRdd = rdd0
+      var lastSchema = ranks0.schema
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIters) {
+        val base = ranks.select(col("node"), col("is_seed"), col("rank_fp").as("old_rank"))
+        val (next, nextRdd) = truncate(round(wide, ranks, base))
+        iter += 1
+        // Exact integer fixed point — reads the just-checkpointed blocks.
+        converged = next.filter(col("rank_fp") =!= col("old_rank")).isEmpty
+        free(lastRdd)
+        lastRdd = nextRdd
+        lastSchema = next.schema
+        ranks = next.select(col("node"), col("rank_fp"), col("is_seed"))
       }
-      // seed flag rides in the rank state: standard PageRank is the
-      // all-seeds special case, so one code path serves both
-      val flagged = seeds match {
-        case None => nodes.select(col("node"), lit(true).as("is_seed"))
-        case Some(sd) =>
-          val sdf = loopS.createDataFrame(
-            sd.select(col("node")).distinct().rdd, sd.select(col("node")).schema)
-          nodes.join(sdf.withColumn("s_flag", lit(true)), Seq("node"), "left")
-            .select(col("node"), coalesce(col("s_flag"), lit(false)).as("is_seed"))
-      }
-      val ranksInit = flagged.select(col("node"),
-        when(col("is_seed"), lit(1000000L)).otherwise(lit(0L)).as("rank_fp"),
-        col("is_seed"))
-      def round(ranks: DataFrame, withOld: Boolean): DataFrame = {
-        val contrib = edges
-          .join(ranks, col("src") === col("node"))
-          .select(col("dst"), expr("rank_fp div deg").as("w"))
-          .groupBy(col("dst")).agg(sum(col("w")).as("inflow"))
-        val base = if (withOld)
-          ranks.select(col("node"), col("rank_fp").as("old_rank"), col("is_seed"))
-        else ranks.select(col("node"), col("is_seed"))
-        val kept = if (withOld) Seq(col("old_rank"), col("is_seed"))
-        else Seq(col("is_seed"))
-        base.join(contrib, col("node") === col("dst"), "left")
-          .select((col("node") +:
-            (when(col("is_seed"), lit(150000L)).otherwise(lit(0L)) +
-              expr("(85 * coalesce(inflow, cast(0 as bigint))) div 100"))
-              .as("rank_fp") +: kept): _*)
-      }
-      if (!convergeStop) {
-        // FIXED-ROUND mode (r15, the registered q_pagerank_k/_personal
-        // path): the per-round truncate paid one blocking count job and
-        // one Row-encode round-trip PER ROUND to bound a plan that, at a
-        // FIXED small round count, is already bounded — so the rounds
-        // chain LAZILY through persists (the q_ann_graph walk discipline:
-        // persist de-duplicates the two per-round references, no eager
-        // count) and ONE action materializes the whole loop. Superseded
-        // round caches are freed after that action; the returned frame
-        // reads the final round's cache. convergeStop keeps the truncate
-        // loop below — its round count is unbounded and each round must
-        // be inspected for the fixed point.
-        var ranks = ranksInit.persist(StorageLevel.MEMORY_AND_DISK)
-        val caches = scala.collection.mutable.Buffer(ranks)
-        var iter = 0
-        while (iter < maxIters) {
-          ranks = round(ranks, withOld = false)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          caches += ranks
-          iter += 1
-          // Each round references its predecessor twice, so the LOGICAL
-          // plan doubles per lazy round — bounded here by one truncation
-          // every 4 rounds (2^4 subtree copies of tiny per-round plans is
-          // cheap to analyze; the registered queries run 3 rounds and
-          // never truncate).
-          if (iter % 4 == 0 && iter < maxIters) {
-            val (t, rdd) = truncate(ranks)
-            caches.foreach(_.unpersist(blocking = false))
-            caches.clear()
-            if (lastRdd != null) free(lastRdd)
-            lastRdd = rdd
-            ranks = t
-            caches += ranks // placeholder: truncated leaf needs no unpersist
-          }
-        }
-        ranks.count() // one materialization fills every round's cache
-        caches.dropRight(1).foreach(_.unpersist(blocking = false))
-        (ranks.select(col("node"), col("rank_fp")), iter)
-      } else {
-        val (ranks0, rdd0) = truncate(ranksInit)
-        var ranks = ranks0
-        lastRdd = rdd0
-        lastSchema = ranks0.schema
-        var converged = false
-        var iter = 0
-        while (!converged && iter < maxIters) {
-          val (next, nextRdd) = truncate(round(ranks, withOld = true))
-          iter += 1
-          // Exact integer fixed point — reads the just-checkpointed blocks.
-          converged = next.filter(col("rank_fp") =!= col("old_rank")).isEmpty
-          free(lastRdd)
-          lastRdd = nextRdd
-          lastSchema = next.schema
-          ranks = next.select(col("node"), col("rank_fp"), col("is_seed"))
-        }
-        if (!converged) throw new IllegalStateException(
-          s"PageRank: integer ranks did not reach a fixed point within $iter rounds")
-        if (checkpointDir.isDefined) lastRdd.unpersist(blocking = false)
-        (s.createDataFrame(lastRdd, lastSchema).select(col("node"), col("rank_fp")),
-          iter)
-      }
+      if (!converged) throw new IllegalStateException(
+        s"PageRank: integer ranks did not reach a fixed point within $iter rounds")
+      if (checkpointDir.isDefined) lastRdd.unpersist(blocking = false)
+      (s.createDataFrame(lastRdd, lastSchema).select(col("node"), col("rank_fp")),
+        iter)
     } catch {
       case t: Throwable =>
         if (lastRdd != null) free(lastRdd)
         throw t
     } finally {
       pairs.unpersist(blocking = false)
-      if (edges != null) edges.unpersist(blocking = false)
-      if (deg != null) deg.unpersist(blocking = false)
+      if (wide != null) wide.unpersist(blocking = false)
     }
+  }
+
+  /** True when `edges` is the prepared `(src, dst, deg)` form; throws when
+    * its third column is named `deg` but is not integral. */
+  private def prepared(edges: DataFrame): Boolean = {
+    val fields = edges.schema.fields
+    val hasDeg = fields.length == 3 && fields.last.name == "deg"
+    require(!hasDeg ||
+      Seq(LongType, IntegerType, ShortType, ByteType).contains(fields.last.dataType),
+      s"PageRank: prepared edges need an integral out-degree column `deg`, " +
+        s"got ${fields.last.dataType}")
+    hasDeg
+  }
+
+  /** (src, dst, deg): prepared edges as given, bare edges widened by their
+    * src out-degree. */
+  private def widened(edges0: DataFrame): DataFrame =
+    if (prepared(edges0)) edges0.toDF("src", "dst", "deg")
+    else {
+      val pairs = edges0.toDF("src", "dst")
+      pairs.join(pairs.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
+    }
+
+  private def endpoints(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct()
+
+  /** One damped round: `ranks` carries (node, rank_fp, …) of the previous
+    * round and is read once; `base` supplies `node`, `is_seed` and any
+    * further columns, which the result carries after (node, rank_fp). */
+  private def round(edges: DataFrame, ranks: DataFrame, base: DataFrame): DataFrame = {
+    val contrib = edges
+      .join(ranks, col("src") === col("node"))
+      .select(col("dst"), expr("rank_fp div deg").as("w"))
+      .groupBy(col("dst")).agg(sum(col("w")).as("inflow"))
+    val kept = base.columns.toSeq.filter(_ != "node").map(col)
+    base.join(contrib, col("node") === col("dst"), "left")
+      .select((col("node") +:
+        (when(col("is_seed"), lit(150000L)).otherwise(lit(0L)) +
+          expr("(85 * coalesce(inflow, cast(0 as bigint))) div 100"))
+          .as("rank_fp") +: kept): _*)
+  }
+
+  private def fixedRounds(edges0: DataFrame, iters: Int, seeds: Option[DataFrame],
+                          nodesPre: Option[DataFrame]): DataFrame = {
+    require(iters >= 1, "at least one PageRank round")
+    val edges = widened(edges0)
+    val nodes = nodesPre.fold(endpoints(edges))(_.select(col("node")))
+    // the seed flag: standard PageRank is the all-seeds special case
+    val flagged = seeds match {
+      case None => nodes.select(col("node"), lit(true).as("is_seed"))
+      case Some(sd) =>
+        nodes.join(sd.select(col("node")).distinct().withColumn("s_flag", lit(true)),
+            Seq("node"), "left")
+          .select(col("node"), coalesce(col("s_flag"), lit(false)).as("is_seed"))
+    }
+    val start = flagged.select(col("node"),
+      when(col("is_seed"), lit(1000000L)).otherwise(lit(0L)).as("rank_fp"))
+    (1 to iters).foldLeft(start)((r, _) => round(edges, r, flagged))
+      .select(col("node"), col("rank_fp"))
   }
 }

@@ -567,12 +567,10 @@ object Dedup {
     // (doc, shingle)), one doc-keyed final aggregate — all map-side
     // combined and safe at corpus scale.
     "q_dup_spans" -> ((s, d) => {
-      // The shingle table feeds both the df aggregate and the join back —
-      // persist for the two consumers, materialize the DOC-SIZED result
-      // eagerly, then release the corpus-sized shingle cache (the
-      // candidateEdges discipline: no session-lifetime residue from a
-      // reusable query). The small persisted result is the residue.
-      val sh = shingles(s, d).persist(StorageLevel.DISK_ONLY)
+      // The shingle asset feeds both the df aggregate and the join back;
+      // both read the parquet table as-is, so the query is one lazy plan
+      // and leaves no cache behind.
+      val sh = shingles(s, d)
       val dfc = sh.groupBy(col("g")).agg(count(lit(1)).as("df"))
       val frac = col("n_dup").cast("double") / col("n_shingles").cast("double")
       val perDoc = sh.join(dfc, "g")
@@ -582,9 +580,6 @@ object Dedup {
         .select(col("doc_id"), col("n_shingles"), col("n_dup"),
           frac.as("dup_span_frac"),
           (frac < 0.9).as("span_ok"))
-        .persist(StorageLevel.DISK_ONLY)
-      perDoc.count()
-      sh.unpersist(blocking = false)
       perDoc.orderBy(col("doc_id"))
     }),
 
@@ -716,9 +711,9 @@ object Dedup {
         s"q_dedup_ngram is the uncapped exact-Jaccard baseline: $nDocs documents " +
           s"exceed the guard ($maxDocs). Use q_dedup_ngram_capped or q_dedup_minhash " +
           "at corpus scale, or raise graft.dedup.ngram.maxDocs explicitly.")
-      // 3 consumers, compute once. DISK_ONLY (not localCheckpoint): survives
-      // executor loss via lineage and is not bounded by executor memory.
-      val ng = shingles(s, d).persist(StorageLevel.DISK_ONLY)
+      // 3 consumers, each reading the shingle asset (already a parquet
+      // table) as-is.
+      val ng = shingles(s, d)
       val cnt = ng.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val common = ng.as("a")
         .join(ng.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
@@ -743,11 +738,9 @@ object Dedup {
     // while carrying no dedup signal. Jaccard is then computed over the
     // surviving (rare, discriminative) shingle sets.
     "q_dedup_ngram_capped" -> ((s, d) => {
-      // The shingle set feeds three consumers (df histogram + both
-      // self-join sides): persist it once instead of recomputing the
-      // tokenize→explode→distinct pipeline per branch — the at-scale
-      // "materialize shingles before pairing" step, durable on disk.
-      val all = shingles(s, d).persist(StorageLevel.DISK_ONLY)
+      // The shingle asset feeds three consumers (df histogram + both
+      // self-join sides), each reading the materialized table as-is.
+      val all = shingles(s, d)
       // 5%-document-frequency cap as an IN-PLAN scalar (one-row broadcast),
       // not a driver count(): no extra blocking job, no sync point. The
       // doc count comes from the documents table (docs with >= 3 tokens,
@@ -857,7 +850,7 @@ object Dedup {
     // the fanout is |candidates| × shingles-per-doc, never the corpus-wide
     // hot-shingle pair explosion of an uncapped shingle self-join.
     "q_minhash_estimate" -> ((s, d) => {
-      val ng = shingles(s, d).persist(StorageLevel.DISK_ONLY)
+      val ng = shingles(s, d)
       // sig feeds three consumers (both band-join sides + the signature
       // compare) — each rescans the materialized [[signatureTable]] asset
       val sig = signatureTable(s, d)
@@ -942,7 +935,7 @@ object Dedup {
     // intersection is counted ONLY on candidate pairs, both directions
     // reported, verdict = either side ≥ 0.9 contained.
     "q_containment" -> ((s, d) => {
-      val ng = shingles(s, d).persist(StorageLevel.DISK_ONLY)
+      val ng = shingles(s, d)
       val cnt = ng.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val cand = bandPairs(signatureTable(s, d))
       val common = cand

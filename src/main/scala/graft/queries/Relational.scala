@@ -737,23 +737,19 @@ object Relational {
     }),
 
     // PageRank ITERATED — q_pagerank_iter's round run k=3 times through
-    // [[graft.operators.PageRank.ranks]] (the Graph.connectedComponents
-    // loop discipline: per-round plan truncation, freed superseded rounds,
-    // loop-scoped shuffle sizing). Fixed round count keeps the query
+    // [[graft.operators.PageRank.ranks]]. Fixed round count keeps the query
     // SQL-oracle-expressible (the chained-CTE oracle below is generated
     // from the same PrRounds constant); the convergence-driven twin
     // [[graft.operators.PageRank.trainConverged]] stops at the exact
     // integer fixed point and is spec-proven on closed-form graphs
     // (PageRankSpec). Integer mass end-to-end — bit-identical in DuckDB.
     //
-    // EAGER, unlike every other builder here: the k-round loop (counts +
-    // per-round checkpoints) runs at BUILD time — the returned frame is a
-    // post-loop LogicalRDD plus sort/limit, so inspecting its plan does
-    // not re-trigger the loop, but building it does the full work, and in
-    // local mode the final localCheckpoint'd RDD stays persisted for the
-    // life of the context (the loop frees every superseded round; only
-    // the result survives). Callers that collect immediately and want the
-    // memory back should unpersist via the frame's .rdd handle.
+    // LAZY like every other builder here: the k rounds are one plan in the
+    // caller's session (each round reads the previous round's ranks once,
+    // so the plan grows linearly in k). Once the purchase_edges asset
+    // exists, building it runs no Spark job; the caller's action runs the
+    // whole loop, with the edge and node exchanges reused across rounds,
+    // and leaves no cache behind.
     "q_pagerank_k" -> ((s, d) =>
       graft.operators.PageRank.ranks(purchaseEdges(s, d), PrRounds,
           nodes = Some(purchaseNodes(s, d)))
@@ -765,9 +761,9 @@ object Relational {
     // (high-balance customers): teleport mass lands only on seeds and
     // start mass is seeds-only, so the ranking answers "which suppliers
     // do my vetted customers endorse" instead of the global variant's
-    // whole-graph endorsement. Same loop, same integer arithmetic, same
-    // EAGER build semantics as q_pagerank_k; the chained-CTE oracle
-    // carries the seed flag through every round.
+    // whole-graph endorsement. Same rounds, same integer arithmetic, same
+    // lazy plan as q_pagerank_k; the chained-CTE oracle carries the seed
+    // flag through every round.
     "q_pagerank_personal" -> ((s, d) => {
       val seeds = t(s, d, "customer")
         .filter(col("c_acctbal") > 9000)
@@ -912,11 +908,10 @@ object Relational {
   /** Node ids ride the loop as LONGS — customer k ↦ 2k, supplier k ↦ 2k+1
     * (disjoint by parity) — and decode to the c<k>/s<k> strings only in
     * each query's final projection (r15, guide §2.3 "narrower types"):
-    * the ~587k-edge relation is persisted, Row-encoded across the loop
-    * session boundary, sorted and joined EVERY round, and 16 bytes/row
-    * beats two small strings everywhere in that path. The oracle replays
-    * the string form from the facts; decoding before the final ORDER BY
-    * keeps tie-breaks on the same string collation. */
+    * the ~587k-edge relation is shuffled and joined EVERY round, and
+    * 16 bytes/row beats two small strings everywhere in that path. The
+    * oracle replays the string form from the facts; decoding before the
+    * final ORDER BY keeps tie-breaks on the same string collation. */
   private[graft] def decodeNode(c: Column): Column =
     concat(when(c % 2 === 0, lit("c")).otherwise(lit("s")),
       shiftright(c.cast("long"), 1).cast("string"))
@@ -930,8 +925,8 @@ object Relational {
         // degree-widened (src, dst, deg) relation is what every rank
         // round actually probes, and it is as deterministic as the edge
         // list — so the widening join is paid once at build instead of
-        // once per rank-query invocation (PageRank.run skips its in-loop
-        // widening when the column is present)
+        // once per rank-query invocation (PageRank skips its own widening
+        // for these prepared edges)
         import org.apache.spark.sql.expressions.Window
         val edges = t(s, d, "orders")
           .select(col("o_custkey"), col("o_orderkey"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /** [[PageRank]] against a driver-side fixed-point-integer simulation and
   * closed-form graphs. The operator's mass is exact integer arithmetic
@@ -35,13 +36,75 @@ class PageRankSpec extends SparkSpec {
   private def collect(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
     df.as[(String, Long)].collect().toMap
 
-  test("ranks(k) matches the integer simulation on a seeded random multigraph, k=1..3") {
-    val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(400)((s"n${rnd.nextInt(40)}", s"n${rnd.nextInt(40)}"))
+  private def randomEdges(seed: Int, n: Int, nodes: Int): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)((s"n${rnd.nextInt(nodes)}", s"n${rnd.nextInt(nodes)}"))
       .filter { case (a, b) => a != b } // self-loops out, parallel edges kept
+  }
+
+  test("ranks(k) matches the integer simulation on a seeded random multigraph, k=1..3") {
+    val edges = randomEdges(7, 400, 40)
     for (k <- 1 to 3)
       assert(collect(PageRank.ranks(edges.toDF("src", "dst"), k)) ==
         simulate(edges, k), s"k=$k")
+  }
+
+  test("ranks(k) matches the integer simulation past four rounds, k=6 and k=9") {
+    val edges = randomEdges(13, 300, 30)
+    for (k <- Seq(6, 9))
+      assert(collect(PageRank.ranks(edges.toDF("src", "dst"), k)) ==
+        simulate(edges, k), s"k=$k")
+  }
+
+  test("prepared (src, dst, deg) edges with a node list equal the bare-edge ranks") {
+    val edges = randomEdges(17, 300, 30)
+    val bare = edges.toDF("src", "dst")
+    val prepared = bare.groupBy("src").agg(count(lit(1)).as("deg"))
+      .join(bare, "src").select("src", "dst", "deg")
+    val nodes = bare.select(col("src").as("node"))
+      .union(bare.select(col("dst").as("node"))).distinct()
+    val seeds = nodes.filter(col("node").endsWith("3"))
+    for (k <- Seq(1, 3)) {
+      assert(collect(PageRank.ranks(prepared, k, nodes = Some(nodes))) ==
+        collect(PageRank.ranks(bare, k)), s"k=$k")
+      assert(collect(PageRank.ranksPersonalized(prepared, seeds, k, nodes = Some(nodes))) ==
+        collect(PageRank.ranksPersonalized(bare, seeds, k)), s"personalized k=$k")
+    }
+  }
+
+  test("a third column named deg must be integral") {
+    val weighted = Seq(("a", "b", 0.5), ("b", "a", 2.0)).toDF("src", "dst", "deg")
+    val e = intercept[IllegalArgumentException](PageRank.ranks(weighted, 3))
+    assert(e.getMessage.contains("deg"))
+    intercept[IllegalArgumentException](PageRank.trainConverged(weighted))
+    // integral widths other than long are accepted
+    val intDeg = Seq(("a", "b", 1), ("b", "a", 1)).toDF("src", "dst", "deg")
+    assert(collect(PageRank.ranks(intDeg, 2)) == simulate(Seq(("a", "b"), ("b", "a")), 2))
+  }
+
+  test("fixed rounds are one lazy plan: building starts no job, collecting leaves no cache") {
+    val edges = randomEdges(19, 300, 30)
+    val seeds = Seq("n1", "n2").toDF("node")
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val (plain, plainJobs) = jobsDuring(PageRank.ranks(edges.toDF("src", "dst"), 3))
+    val (personal, personalJobs) =
+      jobsDuring(PageRank.ranksPersonalized(edges.toDF("src", "dst"), seeds, 3))
+    assert(plainJobs == 0 && personalJobs == 0)
+    assert(collect(plain) == simulate(edges, 3))
+    assert(collect(personal).size == simulate(edges, 3).size)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the registered queries, once their edge asset and tables are resolved
+    for (q <- Seq("q_pagerank_k", "q_pagerank_personal")) {
+      val build = graft.SparkEntry.queries(q)
+      build(spark, sf).collect()
+      val (df, jobs) = jobsDuring(build(spark, sf))
+      assert(jobs == 0, q)
+      assert(df.collect().length == 25, q)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, q)
+      assert(spark.sharedState.cacheManager.isEmpty, q)
+    }
   }
 
   test("ranks requires at least one round") {

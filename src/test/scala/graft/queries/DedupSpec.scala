@@ -228,6 +228,13 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("q_dedup_ngram reads the shingle asset as-is: collecting it leaves no cache") {
+    spark.sharedState.cacheManager.clearCache()
+    val pairs = graft.SparkEntry.queries("q_dedup_ngram")(spark, sf).collect()
+    assert(pairs.nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("q_dedup_ngram guard refuses corpus-scale input until explicitly raised") {
     spark.conf.set("graft.dedup.ngram.maxDocs", "1")
     try {

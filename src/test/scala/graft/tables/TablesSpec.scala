@@ -1,8 +1,6 @@
 package graft.tables
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -12,21 +10,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * no Spark job, and any rewrite of the path (or a change of an inference
   * conf) makes the next read infer again. */
 class TablesSpec extends SparkSpec {
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      TestBus.drain(spark.sparkContext)
-      (r, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** A fresh dir holding copies of the named sf tables, so no earlier
     * suite has resolved these paths yet. */
