@@ -56,10 +56,11 @@ object Dedup {
     * estimate/sweep's Jaccard sides, ssjoin's prefix machinery), and each
     * was re-running the tokenize→explode→corpus-wide distinct shuffle
     * per query. A real pipeline shingles the corpus once and every dedup
-    * stage reads that artifact. Same lifecycle as the other assets:
-    * immutable dataset dirs, shutdown sweep, build cost ledgered in
-    * [[graft.Assets]] (bench `assets_s`). */
-  private val ngCache = scala.collection.concurrent.TrieMap.empty[String, String]
+    * stage reads that artifact. */
+  private def shingles(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, graft.Assets.dir("shingle_table", d) { out =>
+      shinglesRaw(s, d).distinct().write.mode("overwrite").parquet(out)
+    })
 
   /** Partition count for the DOC-LEVEL asset writes below (r15): the
     * fanned build's heavy map side stays session-wide, but letting the
@@ -73,21 +74,9 @@ object Dedup {
     * consumers (q_dup_spans' df aggregate, the candidate joins) do real
     * per-row work and the same A/B showed coalescing THAT asset regressing
     * q_dup_spans 2.11→2.38, so it keeps the build width. 8 is a
-    * LOCAL-LAYOUT default (the asset is a few MB); a production asset
-    * write sizes files by bytes (guide §6), which the conf carries. */
-  private def assetParts(s: SparkSession): Int =
-    s.conf.get("graft.asset.writeParts", "8").toInt
-
-  private def shingles(s: SparkSession, d: String): DataFrame = {
-    val path = ngCache.synchronized {
-      ngCache.getOrElseUpdate(d, graft.Assets.timed("shingle_table") {
-        val out = java.nio.file.Files.createTempDirectory("graft-shingles").toString
-        shinglesRaw(s, d).distinct().write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    Tables.parquet(s, path)
-  }
+    * LOCAL-LAYOUT constant (the asset is a few MB); a production asset
+    * write sizes files by bytes (guide §6). */
+  private val AssetParts = 8
 
   /** (doc_id, g, sz, r): the PPJoin PREFIX INDEX at τ = 1/2 — each doc's
     * rarest-half shingles under the global (df ASC, g ASC) order, with
@@ -97,18 +86,10 @@ object Dedup {
     * the same per-dataset memoization as the signature table. The
     * rarity rank comes from one doc-partitioned window — doc-bounded
     * frames, never corpus-wide. */
-  private val pfxCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def prefixIndex(s: SparkSession, d: String): DataFrame = {
-    val path = pfxCache.synchronized {
-      pfxCache.getOrElseUpdate(d, graft.Assets.timed("ssjoin_prefix_index") {
-        val out = java.nio.file.Files.createTempDirectory("graft-pfxindex").toString
-        computePrefixIndex(s, d).write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    Tables.parquet(s, path)
-  }
+  private def prefixIndex(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, graft.Assets.dir("ssjoin_prefix_index", d) { out =>
+      computePrefixIndex(s, d).write.mode("overwrite").parquet(out)
+    })
 
   /** One full prefix-index build (the path [[prefixIndex]] amortizes). */
   private[graft] def computePrefixIndex(s: SparkSession, d: String): DataFrame = {
@@ -264,25 +245,15 @@ object Dedup {
     * storage (signatures are content-addressed — recomputing the
     * tokenize→shingle→md5→min-agg pipeline per query is the corpus-scale
     * waste). min over repeated shingles equals min over the distinct set,
-    * so one table serves both the raw- and distinct-shingle callers.
-    * Dataset dirs are immutable in this engine's convention (the
-    * [[Similarity]] vecCount precedent), and the temp dirs are swept by
-    * the same JVM shutdown hook as the component labeling. */
-  private val sigCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * so one table serves both the raw- and distinct-shingle callers. */
   private def signatureTable(s: SparkSession, d: String): DataFrame = {
     // the asset is keyed by (dir, geometry): a knob-widened session must
     // not read a default-width signature, and vice versa
     val rows = rowsFor(s, d)
-    val path = sigCache.synchronized {
-      sigCache.getOrElseUpdate(s"$d|$rows", graft.Assets.timed("minhash_signatures") {
-        val out = java.nio.file.Files.createTempDirectory("graft-minhash-sig").toString
-        signature(shinglesRaw(s, d), rows).coalesce(assetParts(s))
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    Tables.parquet(s, path)
+    Tables.parquet(s, graft.Assets.dir("minhash_signatures", s"$d|$rows") { out =>
+      signature(shinglesRaw(s, d), rows).coalesce(AssetParts)
+        .write.mode("overwrite").parquet(out)
+    })
   }
 
   /** The corpus LSH BAND INDEX — the distinct (band, bv) buckets of the
@@ -291,19 +262,12 @@ object Dedup {
     * incremental/streaming ingest probes ("does this new doc collide with
     * ANY existing bucket"), so it is computed once and every micro-batch
     * reads the narrow parquet. */
-  private val bandIdxCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def bandIndex(s: SparkSession, d: String): DataFrame = {
     val rows = rowsFor(s, d)
-    val path = bandIdxCache.synchronized {
-      bandIdxCache.getOrElseUpdate(s"$d|$rows", graft.Assets.timed("lsh_band_index") {
-        val out = java.nio.file.Files.createTempDirectory("graft-bandidx").toString
-        bandsOf(signatureTable(s, d)).select(col("band"), col("bv"))
-          .distinct().write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    Tables.parquet(s, path)
+    Tables.parquet(s, graft.Assets.dir("lsh_band_index", s"$d|$rows") { out =>
+      bandsOf(signatureTable(s, d)).select(col("band"), col("bv"))
+        .distinct().write.mode("overwrite").parquet(out)
+    })
   }
 
   /** MinHash signatures of an arbitrary (doc_id, text) frame — the SAME
@@ -445,33 +409,11 @@ object Dedup {
     * reference materializing query results into a destination table once
     * and paginating it many times, bq.py:193-217), and it is immune to the
     * bench harness's between-query cache purge (a persisted frame would
-    * not be). A dataset dir is immutable in this engine's convention, so
-    * staleness is not a correctness risk (the [[Similarity]] vecCount
-    * precedent); the temp dirs are swept by a JVM shutdown hook. */
-  private val labeledCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private val labeledSweeper: Unit = sys.addShutdownHook {
-    (labeledCache.values ++ sigCache.values ++ ngCache.values ++
-      pfxCache.values ++ bandIdxCache.values).foreach { p =>
-      try {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }
-    }
-  }
-
-  private def labeledDocs(s: SparkSession, d: String): DataFrame = {
-    val path = labeledCache.synchronized {
-      labeledCache.getOrElseUpdate(d, graft.Assets.timed("dedup_components") {
-        val out = java.nio.file.Files.createTempDirectory("graft-components").toString
-        computeLabeledDocs(s, d).write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    Tables.parquet(s, path)
-  }
+    * not be). */
+  private def labeledDocs(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, graft.Assets.dir("dedup_components", d) { out =>
+      computeLabeledDocs(s, d).write.mode("overwrite").parquet(out)
+    })
 
   /** One full labeling build (the expensive path [[labeledDocs]] amortizes).
     * `graft.dedup.checkpointDir`, when set, routes the CC loop through

@@ -30,39 +30,21 @@ object Shapes {
     * (order, part)-distinct self-join feeds FOUR graph queries
     * (q_triangle_count, q_shortest_path, q_label_prop, q_kcore), and a
     * real pipeline computes the edge list in one job and serves every
-    * graph analysis from storage. Narrow (2 keys + 1 count), dataset
-    * dirs are immutable in this engine's convention, and the temp dir is
-    * swept by a JVM shutdown hook. Unweighted consumers read (a, b);
-    * q_shortest_path reads the count as its tie-strength weight. */
-  private val edgeCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private val edgeSweeper: Unit = sys.addShutdownHook {
-    edgeCache.values.foreach { p =>
-      try {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }
-    }
-  }
-
+    * graph analysis from storage. Narrow (2 keys + 1 count). Unweighted
+    * consumers read (a, b); q_shortest_path reads the count as its
+    * tie-strength weight. */
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    val path = edgeCache.synchronized {
-      edgeCache.getOrElseUpdate(d, graft.Assets.timed("copurchase_edges") {
-        val out = java.nio.file.Files.createTempDirectory("graft-copurchase").toString
-        val li = t(s, d, "lineitem")
-          .filter(col("l_shipdate") >= to_timestamp(lit("2000-01-01")) &&
-            col("l_shipdate") < to_timestamp(lit("2001-01-01")))
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        li.as("x").join(li.as("y"),
-            col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-          .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(out)
-        out
-      })
+    val path = graft.Assets.dir("copurchase_edges", d) { out =>
+      val li = t(s, d, "lineitem")
+        .filter(col("l_shipdate") >= to_timestamp(lit("2000-01-01")) &&
+          col("l_shipdate") < to_timestamp(lit("2001-01-01")))
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct()
+      li.as("x").join(li.as("y"),
+          col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
+        .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(out)
     }
     Tables.parquet(s, path)
   }

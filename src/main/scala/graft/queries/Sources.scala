@@ -15,37 +15,13 @@ object Sources {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** One physical LAYOUT build per (layout kind, dataset dir) per JVM —
-    * the Z-order/bucketed/ORC layouts are "ingest once, join/probe
-    * forever" assets (that is their entire point at 100 TB), so repeat
-    * invocations (bench medians, multi-scale verify) re-probe the same
-    * on-disk layout instead of re-clustering the table and, for the
-    * bucketed case, re-registering a fresh pair of catalog tables each
-    * time (previously: unbounded catalog + temp-dir growth per JVM,
-    * round-10 advice). Dataset dirs are immutable by this engine's
-    * convention, so a cached layout cannot go stale; the dirs are swept
-    * by a JVM shutdown hook. */
-  private val layoutCache = scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private val layoutSweeper: Unit = sys.addShutdownHook {
-    layoutCache.values.foreach { p =>
-      try {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }
-    }
-  }
-
-  private def layoutOnce(kind: String, d: String)(build: String => Unit): String =
-    layoutCache.synchronized {
-      layoutCache.getOrElseUpdate((kind, d), graft.Assets.timed(s"layout_$kind") {
-        val base = java.nio.file.Files.createTempDirectory(s"graft-$kind").toString
-        build(base)
-        base
-      })
-    }
+  // One physical LAYOUT build per (layout kind, dataset dir) per JVM
+  // (`Assets.dir("layout_<kind>", d)`): the Z-order/bucketed/ORC layouts
+  // are "ingest once, join/probe forever" assets (that is their entire
+  // point at 100 TB), so repeat invocations (bench medians, multi-scale
+  // verify) re-probe the same on-disk layout instead of re-clustering the
+  // table and, for the bucketed case, re-registering a fresh pair of
+  // catalog tables each time (round-10 advice).
 
   val queries: Map[String, QFn] = Map(
 
@@ -54,7 +30,7 @@ object Sources {
     // documents written under {base}/docs/version=1/year=…/… and read back
     // via partition discovery must reproduce the table exactly.
     "q_dataset_roundtrip" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-ds").toString
+      val base = graft.Assets.tempDir("graft-ds")
       DatasetConvention.append(
         t(s, d, "documents").select(col("doc_id"), col("text"), col("n_chars")),
         base, "docs", version = 1, ts = Instant.parse("2024-01-15T00:00:00Z"))
@@ -79,7 +55,7 @@ object Sources {
     // for this predicate — is ZOrderSpec's locality case plus the
     // pushed-filter pin in SourcesSpec.
     "q_zorder_scan" -> ((s, d) => {
-      val base = layoutOnce("zorder", d) { b =>
+      val base = graft.Assets.dir("layout_zorder", d) { b =>
         graft.operators.ZOrder.layoutK(
             t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"),
               col("l_suppkey"), col("l_quantity"), col("l_extendedprice")),
@@ -109,7 +85,7 @@ object Sources {
     // SourcesSpec).
     "q_dpp_scan" -> ((s, d) => {
       val raw = t(s, d, "orders")
-      val base = layoutOnce("month", d) { b =>
+      val base = graft.Assets.dir("layout_month", d) { b =>
         raw.withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
           .write.mode("overwrite").partitionBy("o_month").parquet(b)
       }
@@ -173,8 +149,8 @@ object Sources {
     // bucket-file sort order — is the broadcast-disabled plan pin in
     // SourcesSpec (and BucketedJoinSpec for the operator itself).
     "q_bucketed_join" -> ((s, d) => {
-      val base = layoutOnce("bucket", d) { b =>
-        val tag = b.replaceAll(".*graft-bucket", "").replaceAll("[^0-9]", "")
+      val base = graft.Assets.dir("layout_bucket", d) { b =>
+        val tag = b.replaceAll(".*graft-layout_bucket", "").replaceAll("[^0-9]", "")
         TableOps.saveBucketed(
           t(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority")),
           s"graft_b_orders_$tag", "o_orderkey", 16, overwrite = true,
@@ -187,8 +163,8 @@ object Sources {
       }
       // catalog names carry the temp dir's unique suffix: two dataset
       // dirs in one JVM never collide, and a JVM ever registers at most
-      // ONE table pair per dataset (the layoutOnce contract)
-      val tag = base.replaceAll(".*graft-bucket", "").replaceAll("[^0-9]", "")
+      // ONE table pair per dataset (the layout asset contract)
+      val tag = base.replaceAll(".*graft-layout_bucket", "").replaceAll("[^0-9]", "")
       val (to, tl) = (s"graft_b_orders_$tag", s"graft_b_lineitem_$tag")
       s.table(to)
         .join(s.table(tl), "o_orderkey")
@@ -329,7 +305,7 @@ object Sources {
     // drift across formats. Plan pin in SourcesSpec: partition filter +
     // pushed predicate both visible in the ORC scan.
     "q_orc_roundtrip" -> ((s, d) => {
-      val base = layoutOnce("orc", d) { b =>
+      val base = graft.Assets.dir("layout_orc", d) { b =>
         t(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
             col("l_extendedprice"))
@@ -357,9 +333,9 @@ object Sources {
     // microsecond UTC format, and the partition column re-enters typed
     // through the directory name. The oracle reads the raw parquet
     // table, so hash equality proves the text round-trip lossless for
-    // longs, doubles, strings, and timestamps. Same layout lifecycle as
-    // the ORC/Z-order/bucketed layouts (one build per JVM, swept at
-    // exit); partition pruning on o_orderstatus is pinned in SourcesSpec
+    // longs, doubles, strings, and timestamps. Built once per JVM like
+    // the ORC/Z-order/bucketed layouts; partition pruning on o_orderstatus
+    // is pinned in SourcesSpec
     // (CSV has no row-group stats — directory pruning is the ONLY scan
     // reduction the format offers, which is exactly why hive-style
     // partitioning matters more for text formats).
@@ -370,7 +346,7 @@ object Sources {
       // hop unchanged (an LTZ re-read would silently re-type the column
       // even when the UTC session makes the values agree).
       val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val base = layoutOnce("csv", d) { b =>
+      val base = graft.Assets.dir("layout_csv", d) { b =>
         t(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"),
             col("o_orderstatus"))
@@ -399,7 +375,7 @@ object Sources {
     // name-aligned union, v1 rows carrying NULL for the columns their
     // schema predates. The oracle reproduces exactly that null pattern.
     "q_dataset_versions" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-dsv").toString
+      val base = graft.Assets.tempDir("graft-dsv")
       val docs = t(s, d, "documents")
       DatasetConvention.append(
         docs.filter(col("n_chars") % 2 === 0).select(col("doc_id"), col("text")),

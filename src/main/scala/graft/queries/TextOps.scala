@@ -233,32 +233,14 @@ object TextOps {
     * pipeline trains/scores once and every downstream gate reads — both
     * consumers (q_lm_perplexity, the q_pipeline_corpus capstone) probe
     * one parquet instead of re-training the LM and re-scoring the
-    * corpus. Build cost ledgered; temp dirs swept at JVM shutdown. NOT
-    * applied to q_bigram_lm, whose registered output IS the training. */
-  private val pplCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private val pplSweeper: Unit = sys.addShutdownHook {
-    pplCache.values.foreach { p =>
-      try {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }
-    }
-  }
-
-  private[graft] def docPerplexity(s: SparkSession, d: String): DataFrame = {
-    val path = pplCache.synchronized {
-      pplCache.getOrElseUpdate(d, graft.Assets.timed("bigram_ppl") {
-        val out = java.nio.file.Files.createTempDirectory("graft-ppl").toString
-        computeDocPerplexity(graft.Tables.load(s, d, "documents"))
-          .write.mode("overwrite").parquet(out)
-        out
-      })
-    }
-    Tables.parquet(s, path)
-  }
+    * corpus. NOT applied to q_bigram_lm, whose registered output IS the
+    * training. */
+  private[graft] def docPerplexity(s: SparkSession, d: String): DataFrame =
+    Tables.parquet(s, graft.Assets.dir("bigram_ppl", d) { out =>
+      val scored = computeDocPerplexity(graft.Tables.load(s, d, "documents"))
+      try scored.write.mode("overwrite").parquet(out)
+      finally scored.unpersist(blocking = false)
+    })
 
   /** One full train+score build (the path [[docPerplexity]] amortizes). */
   private[graft] def computeDocPerplexity(docs: DataFrame): DataFrame = {

@@ -30,36 +30,16 @@ object MediaStream {
     * MATERIALIZED ONCE per (dir, frames, radius) per JVM (the Dedup band
     * index discipline): the streaming probe joins this narrow static
     * asset every micro-batch, so it must not re-decode the corpus per
-    * trigger. Swept at JVM shutdown like every other temp asset. */
-  private val idxCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
-
-  private val idxSweeper: Unit = sys.addShutdownHook {
-    idxCache.values.foreach { p =>
-      try {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }
-    }
-  }
-
+    * trigger. */
   private def frameBandIndex(spark: SparkSession, dir: String,
                              nFrames: Int, maxHamming: Int): DataFrame = {
     import spark.implicits._
-    val path = idxCache.synchronized {
-      idxCache.getOrElseUpdate((dir, nFrames, maxHamming),
-        graft.Assets.timed("media_band_index") {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-mediaidx").toString
-          val corpus = spark.read.schema(Multimodal.mediaSchema)
-            .parquet(s"$dir/media.parquet").as[Multimodal.Media]
-          Multimodal.frameBands(
-              Multimodal.videoHashes(corpus, nFrames).toDF(), maxHamming)
-            .write.mode("overwrite").parquet(out)
-          out
-        })
+    val path = graft.Assets.dir("media_band_index", (dir, nFrames, maxHamming)) { out =>
+      val corpus = spark.read.schema(Multimodal.mediaSchema)
+        .parquet(s"$dir/media.parquet").as[Multimodal.Media]
+      Multimodal.frameBands(
+          Multimodal.videoHashes(corpus, nFrames).toDF(), maxHamming)
+        .write.mode("overwrite").parquet(out)
     }
     graft.Tables.parquet(spark, path)
   }

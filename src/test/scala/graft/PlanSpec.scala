@@ -248,7 +248,7 @@ class PlanSpec extends SparkSpec {
     // the ANN index build q_ann_graph/q_ann_nnd amortize: candidate
     // generation is equi-joins on (table, bucket) and the shared graph
     // endpoint; ranking is the bounded typed aggregator, never row_number
-    val p = graft.queries.Similarity.computeNndNeighbors(spark, sf)
+    val p = graft.queries.Similarity.computeNndNeighbors(spark, sf)._1
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("Window"), p)
