@@ -65,6 +65,14 @@ object Tables {
     else df
   }
 
+  /** Row count of table `name` under `sfDir`, counted once per JVM through
+    * [[Assets.once]] (ledgered as `count_<name>`): the scale guards read it
+    * at query-build time, where a fresh count would be one Spark job per
+    * call. A dataset dir is immutable by this engine's convention, so the
+    * count cannot go stale. */
+  def count(spark: SparkSession, sfDir: String, name: String): Long =
+    Assets.once(s"count_$name", sfDir)(load(spark, sfDir, name).count())
+
   /** Session confs that change what parquet schema inference returns. */
   private val inferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -29,163 +28,91 @@ object Graph {
     * caller joins the result back to its full entity table (as
     * q_dedup_resolve does).
     *
-    * Loop-state discipline: each round's result is truncated through an
-    * explicitly held, localCheckpoint'd RDD ([[truncate]]) — each round
-    * references the previous labels plan twice and Catalyst plans are
-    * trees copied by value, so without truncation the analyzed plan
-    * doubles per iteration. Holding the RDD handle means the superseded
-    * round's blocks are freed by unpersisting exactly that RDD — nothing
-    * else in the SparkContext is touched, so the operator is safe next to
-    * concurrent queries on the same session. On a real cluster the loop
-    * state uses reliable `checkpoint()` for executor-loss tolerance when
-    * the caller passes `checkpointDir` (see below).
-    *
-    * Loop-scoped session tuning: the loop runs its DataFrames in a CHILD
-    * session (`newSession()` — isolated SQLConf, shared SparkContext), so
-    * setting the loop's shuffle width (sized from the edge count — the
-    * loop runs over the docs-in-pairs sliver, not the corpus) and
-    * disabling AQE (its per-stage stat-collection jobs are pure latency on
-    * small state with a pre-chosen partitioning) never mutates the
-    * caller's session conf. RDDs are session-agnostic, so loop state
-    * crosses between parent and child sessions for free; the per-round
-    * InternalRow→Row→InternalRow re-encode this costs is negligible on
-    * loop-state-sized data. The returned labels frame belongs to the
-    * CALLER's session and reads the final round's checkpoint blocks
-    * (which therefore stay persisted — the one deliberate residue).
+    * Loop state goes through [[Loop]]: each round is cut to a checkpointed
+    * leaf ([[Loop.cut]]) because a round reads the previous labels twice
+    * and Catalyst plans are trees copied by value, so an uncut plan
+    * doubles per round; the superseded round is freed at once
+    * ([[Loop.free]]), touching nothing else in the SparkContext. The edge
+    * list enters the loop once, as a flat leaf partitioned on `src` and
+    * stored DISK_ONLY (twice the input edge list, kept off the executor
+    * heap): carrying its lineage into every round makes the loop about
+    * twice as slow in driver-side plan work alone. The rounds run in a loop
+    * session ([[Loop.session]]) sized from the edge count (the loop runs
+    * over the docs-in-pairs sliver, not the corpus) with AQE off; the
+    * caller's session conf is never touched. The returned labels frame
+    * belongs to the CALLER's session and reads the final round's
+    * checkpoint, which therefore stays (the one deliberate residue).
     *
     * @param maxIters safety cap; path halving makes the default ample for
     *                 any graph this side of diameter 2^20. Hitting the cap
     *                 THROWS — silently emitting labels that disagree with
     *                 the transitive closure would corrupt downstream dedup.
     * @param checkpointDir when set, loop state is RELIABLY checkpointed
-    *                 there (`rdd.checkpoint()` to the shared filesystem)
-    *                 instead of `localCheckpoint()`d: a lost executor
-    *                 re-reads the round's blocks from the FS instead of
-    *                 killing the loop — the right mode on a real cluster
-    *                 (≙ the reference retrying every long operation,
-    *                 bq.py:367-383, gcs.py:221-235). Superseded rounds'
-    *                 checkpoint files are deleted as the loop advances; the
-    *                 final round's files back the returned frame and are
-    *                 the caller's to sweep. Sets the SparkContext
-    *                 checkpoint dir (a context-global, like the reference's
-    *                 client-wide retry policy) — CONCURRENT invocations in
-    *                 one SparkContext must therefore pass the SAME
-    *                 checkpointDir (the last set wins for both loops);
-    *                 callers needing distinct dirs must serialize calls.
+    *                 there (files on the shared filesystem) instead of
+    *                 local-checkpointed: a lost executor re-reads the
+    *                 round from the FS instead of killing the loop — the
+    *                 right mode on a real cluster (≙ the reference retrying
+    *                 every long operation, bq.py:367-383, gcs.py:221-235).
+    *                 Superseded rounds' checkpoint files are deleted as the
+    *                 loop advances; the final round's files back the
+    *                 returned frame and are the caller's to sweep. The
+    *                 SparkContext checkpoint dir is context-global (like
+    *                 the reference's client-wide retry policy), so
+    *                 CONCURRENT invocations in one SparkContext must pass
+    *                 the SAME checkpointDir.
     */
   def connectedComponents(pairs0: DataFrame, maxIters: Int = 20,
                           checkpointDir: Option[String] = None): DataFrame = {
     val s = pairs0.sparkSession
+    // The input is read three times (count, both edge orientations). It
+    // is not loop state: a plain cache, rebuilt from lineage if an
+    // executor is lost before the edges below are stored.
     val pairs = pairs0.toDF("src", "dst").persist(StorageLevel.DISK_ONLY)
-    val loopS = s.newSession()
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    // Plan truncation with a DIRECTLY HELD RDD handle: df.rdd is
-    // checkpointed (reliable when checkpointDir is set, local otherwise),
-    // materialized eagerly, and wrapped back as a leaf (LogicalRDD)
-    // DataFrame in the loop session. The caller unpersists exactly the RDD
-    // it created, never a diff of global persisted-RDD state — a
-    // concurrent query's caches can't be collateral damage.
-    def truncate(df: DataFrame): (DataFrame, RDD[Row]) = {
-      val rdd = df.rdd
-      if (checkpointDir.isDefined) {
-        // persist-then-checkpoint idiom: a bare checkpoint() recomputes the
-        // RDD from lineage in the checkpoint job AFTER count() has already
-        // materialized it once, doubling per-round cost; caching DISK_ONLY
-        // first lets the checkpoint job read the computed blocks. free()
-        // unpersists the superseded round's cache along with its files.
-        rdd.persist(StorageLevel.DISK_ONLY)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint()
-      rdd.count()
-      (loopS.createDataFrame(rdd, df.schema), rdd)
-    }
-    // Frees a superseded round: unpersist its blocks (local mode) and
-    // delete its checkpoint files (reliable mode) — the successor round
-    // was fully materialized FROM them by truncate's count(), so nothing
-    // can re-read them.
-    def free(rdd: RDD[Row]): Unit = {
-      rdd.unpersist(blocking = false)
-      if (checkpointDir.isDefined) rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-    }
     var edges: DataFrame = null
-    var prevRdd: RDD[Row] = null
-    var lastRdd: RDD[Row] = null
-    var lastSchema: org.apache.spark.sql.types.StructType = null
     try {
-      val nEdges = pairs.count() * 2
-      val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
-      val loopParts =
-        math.max(1L, math.min(sessionParts.toLong, nEdges / 100000L + 1L)).toInt
-      loopS.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      loopS.conf.set("spark.sql.adaptive.enabled", "false")
+      val parts = Loop.parts(s, pairs.count() * 2)
+      val loopS = Loop.session(s, parts)
       val bidir = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      edges = loopS.createDataFrame(bidir.rdd, bidir.schema)
-        .repartition(loopParts, col("src"))
-        .persist(StorageLevel.DISK_ONLY)
-      edges.count() // edges is materialized; pairs is now dead weight
+      // entry into the loop session: the one Row re-encode on the way in
+      edges = Loop.cut(loopS.createDataFrame(bidir.rdd, bidir.schema)
+        .repartition(parts, col("src")), checkpointDir, StorageLevel.DISK_ONLY)
       pairs.unpersist(blocking = false)
-      var converged = false
-      var iter = 0
-      val (labels0, rdd0) = truncate(
-        edges.select(col("src").as("doc")).distinct()
-          .select(col("doc"), col("doc").as("comp")))
-      var labels = labels0
-      lastRdd = rdd0
-      lastSchema = labels0.schema
-      while (!converged && iter < maxIters) {
-        // neighbor step: take the min label over incoming edges
-        val prop = edges.join(labels, col("src") === col("doc"))
-          .groupBy(col("dst")).agg(min(col("comp")).as("nc"))
-        val stepped = labels.as("l")
-          .join(prop, col("l.doc") === col("dst"), "left")
-          .select(col("l.doc").as("doc"),
-            least(col("l.comp"), coalesce(col("nc"), col("l.comp"))).as("comp"),
-            col("l.comp").as("old_comp")) // carried for the convergence test
-        // path halving: comp := min(comp, comp(comp))
-        val m = stepped.select(col("doc").as("m_doc"), col("comp").as("m_comp"))
-        val (next, nextRdd) = truncate(stepped.as("st")
-          .join(m, col("st.comp") === col("m_doc"), "left")
-          .select(col("st.doc").as("doc"),
-            least(col("st.comp"), coalesce(col("m_comp"), col("st.comp"))).as("comp"),
-            col("st.old_comp").as("old_comp")))
-        iter += 1
-        // Convergence check every 2nd round (reads the just-checkpointed
-        // blocks — no extra join): a diameter-d graph needs ~log2(d)
-        // path-halved rounds, so checking half as often saves blocking
-        // actions at the cost of at most one extra round over converged
-        // (tiny) state. An even cap means the final permitted round checks.
-        converged = (iter % 2 == 0 || iter == maxIters) &&
+      val init = edges.select(col("src").as("doc")).distinct()
+        .select(col("doc"), col("doc").as("comp"))
+      val (last, _) = Loop.fixpoint(init, maxIters, checkpointDir, n =>
+        s"connectedComponents: label propagation did not converge within $n rounds") {
+        prev =>
+          val labels = prev.select(col("doc"), col("comp"))
+          // neighbor step: take the min label over incoming edges
+          val prop = edges.join(labels, col("src") === col("doc"))
+            .groupBy(col("dst")).agg(min(col("comp")).as("nc"))
+          val stepped = labels.as("l")
+            .join(prop, col("l.doc") === col("dst"), "left")
+            .select(col("l.doc").as("doc"),
+              least(col("l.comp"), coalesce(col("nc"), col("l.comp"))).as("comp"),
+              col("l.comp").as("old_comp")) // carried for the convergence test
+          // path halving: comp := min(comp, comp(comp))
+          val m = stepped.select(col("doc").as("m_doc"), col("comp").as("m_comp"))
+          stepped.as("st")
+            .join(m, col("st.comp") === col("m_doc"), "left")
+            .select(col("st.doc").as("doc"),
+              least(col("st.comp"), coalesce(col("m_comp"), col("st.comp"))).as("comp"),
+              col("st.old_comp").as("old_comp"))
+      } { (next, n) =>
+        // Convergence check every 2nd round (reads the just-stored round —
+        // no extra join): a diameter-d graph needs ~log2(d) path-halved
+        // rounds, so checking half as often saves blocking actions at the
+        // cost of at most one extra round over converged (tiny) state. An
+        // even cap means the final permitted round checks.
+        (n % 2 == 0 || n == maxIters) &&
           next.filter(col("comp") =!= col("old_comp")).isEmpty
-        // The superseded round's checkpoint blocks are dead the moment we
-        // swap labels — free them now rather than carrying every round's
-        // blocks to the end of the query.
-        prevRdd = lastRdd
-        free(prevRdd)
-        lastRdd = nextRdd
-        lastSchema = next.schema
-        labels = next.select(col("doc"), col("comp"))
       }
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents: label propagation did not converge within $iter rounds")
-      // Hand the result back in the CALLER's session, reading the final
-      // checkpoint — independent of edges/pairs, which the finally block
-      // can therefore safely drop even on the success path. In reliable
-      // mode the final round's CACHE blocks were only needed to make its
-      // checkpoint job cheap — drop them now; the returned frame re-reads
-      // the checkpoint FILES (which remain the caller's to sweep).
-      if (checkpointDir.isDefined) lastRdd.unpersist(blocking = false)
-      s.createDataFrame(lastRdd, lastSchema).select(col("doc"), col("comp"))
-    } catch {
-      case t: Throwable =>
-        // On failure nothing downstream will read the last round — drop it.
-        if (lastRdd != null) free(lastRdd)
-        throw t
+      // exit: the labels as a frame of the caller's session
+      val out = last.select(col("doc"), col("comp"))
+      s.createDataFrame(out.rdd, out.schema)
     } finally {
       pairs.unpersist(blocking = false)
-      if (edges != null) edges.unpersist(blocking = false)
+      if (edges != null) Loop.free(edges)
     }
   }
 }

@@ -161,8 +161,9 @@ object KMeans {
     * cluster sums of assigning with `model(updates = iters - 1)`. */
   def model(vecs: DataFrame, initIds: Seq[Long], updates: Int): Model = {
     // the loop reads the vector table updates+1 times (seed + each round):
-    // cache it for the eager section, release before returning — the same
-    // loop discipline as Graph.connectedComponents / MLlib KMeans
+    // cache it for the eager section, release before returning (MLlib
+    // KMeans does the same). The model state is collected to the driver
+    // every round, so no plan grows and nothing needs Loop.cut.
     val cached = vecs.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       var cents = seed(cached, initIds)

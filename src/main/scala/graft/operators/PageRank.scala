@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
@@ -87,84 +86,43 @@ object PageRank {
     val s = edges.sparkSession
     val hasDeg = prepared(edges)
     // The prepared path's contract is a MATERIALIZED relation (an asset
-    // table), so re-scanning it is cheap by construction and the guard
-    // persist below would only add a full disk write of the edge list.
+    // table), so re-scanning it is cheap by construction and a cache would
+    // only add a full disk write of the edge list; bare edges are read
+    // twice (count, widening) and are cached first (not loop state: a
+    // plain cache, rebuilt from lineage if an executor is lost).
     val pairs = if (hasDeg) edges.toDF("src", "dst", "deg")
     else edges.toDF("src", "dst").persist(StorageLevel.DISK_ONLY)
-    val loopS = s.newSession()
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
-    // Plan truncation with a directly held RDD handle — the Graph.truncate
-    // idiom verbatim: reliable-or-local checkpoint, eager materialization,
-    // LogicalRDD leaf in the loop session.
-    def truncate(df: DataFrame): (DataFrame, RDD[Row]) = {
-      val rdd = df.rdd
-      if (checkpointDir.isDefined) {
-        rdd.persist(StorageLevel.DISK_ONLY)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint()
-      rdd.count()
-      (loopS.createDataFrame(rdd, df.schema), rdd)
-    }
-    def free(rdd: RDD[Row]): Unit = {
-      rdd.unpersist(blocking = false)
-      if (checkpointDir.isDefined) rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-    }
     var wide: DataFrame = null
-    var lastRdd: RDD[Row] = null
     try {
-      val nEdges = pairs.count()
-      val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
-      val loopParts =
-        math.max(1L, math.min(sessionParts.toLong, nEdges / 100000L + 1L)).toInt
-      loopS.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      loopS.conf.set("spark.sql.adaptive.enabled", "false")
-      // Edges pre-partitioned on the join key (src) once, then WIDENED by
-      // their out-degree once — the (src, dst, deg) relation every round's
-      // contribution join probes, paid once instead of once per round.
-      // `bare` appears twice in the widening (the aggregate and the join
-      // probe), but both references share the identical repartition
-      // exchange (ReuseExchange dedups it, so the feeder RDD is scanned
-      // once), and the src-keyed join already emits
-      // hashpartitioning(src, loopParts).
+      val parts = Loop.parts(s, pairs.count())
+      val loopS = Loop.session(s, parts)
+      // Edges pre-partitioned on the join key (src) and WIDENED by their
+      // out-degree once, then cut: the flat (src, dst, deg) leaf every
+      // round's contribution join probes. `bare` appears twice in the
+      // widening (the aggregate and the join probe), but both references
+      // share the identical repartition exchange (ReuseExchange), and the
+      // src-keyed join already emits hashpartitioning(src, parts), which
+      // the cut keeps.
+      // entry into the loop session: the one Row re-encode on the way in
       val bare = loopS.createDataFrame(pairs.rdd, pairs.schema)
-        .repartition(loopParts, col("src"))
-      wide = widened(bare).persist(StorageLevel.MEMORY_AND_DISK)
-      wide.count() // edges-with-deg materialized; feeder handles are dead weight
-      pairs.unpersist(blocking = false)
-      val ranksInit = endpoints(wide)
+        .repartition(parts, col("src"))
+      wide = Loop.cut(widened(bare), checkpointDir)
+      if (!hasDeg) pairs.unpersist(blocking = false)
+      val init = endpoints(wide)
         .select(col("node"), lit(1000000L).as("rank_fp"), lit(true).as("is_seed"))
-      val (ranks0, rdd0) = truncate(ranksInit)
-      var ranks = ranks0
-      lastRdd = rdd0
-      var lastSchema = ranks0.schema
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        val base = ranks.select(col("node"), col("is_seed"), col("rank_fp").as("old_rank"))
-        val (next, nextRdd) = truncate(round(wide, ranks, base))
-        iter += 1
-        // Exact integer fixed point — reads the just-checkpointed blocks.
-        converged = next.filter(col("rank_fp") =!= col("old_rank")).isEmpty
-        free(lastRdd)
-        lastRdd = nextRdd
-        lastSchema = next.schema
-        ranks = next.select(col("node"), col("rank_fp"), col("is_seed"))
-      }
-      if (!converged) throw new IllegalStateException(
-        s"PageRank: integer ranks did not reach a fixed point within $iter rounds")
-      if (checkpointDir.isDefined) lastRdd.unpersist(blocking = false)
-      (s.createDataFrame(lastRdd, lastSchema).select(col("node"), col("rank_fp")),
-        iter)
-    } catch {
-      case t: Throwable =>
-        if (lastRdd != null) free(lastRdd)
-        throw t
+      val (last, n) = Loop.fixpoint(init, maxIters, checkpointDir, n =>
+        s"PageRank: integer ranks did not reach a fixed point within $n rounds") {
+        prev =>
+          val ranks = prev.select(col("node"), col("rank_fp"), col("is_seed"))
+          round(wide, ranks,
+            ranks.select(col("node"), col("is_seed"), col("rank_fp").as("old_rank")))
+      } { (next, _) => next.filter(col("rank_fp") =!= col("old_rank")).isEmpty }
+      // exit: the ranks as a frame of the caller's session
+      val out = last.select(col("node"), col("rank_fp"))
+      (s.createDataFrame(out.rdd, out.schema), n)
     } finally {
-      pairs.unpersist(blocking = false)
-      if (wide != null) wide.unpersist(blocking = false)
+      if (!hasDeg) pairs.unpersist(blocking = false)
+      if (wide != null) Loop.free(wide)
     }
   }
 

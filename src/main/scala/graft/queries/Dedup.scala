@@ -167,7 +167,7 @@ object Dedup {
   private def rowsFor(s: SparkSession, d: String): Int =
     s.conf.get("graft.dedup.minhash.rows", DefaultRows.toString) match {
       case "auto" =>
-        val n = docCount.getOrElseUpdate(d, t(s, d, "documents").count())
+        val n = Tables.count(s, d, "documents")
         math.min(MaxRows, math.max(DefaultRows, DefaultRows +
           2 * math.ceil(math.log10(math.max(1.0, n / 5000.0))).toInt))
       case v =>
@@ -176,10 +176,6 @@ object Dedup {
           s"graft.dedup.minhash.rows must be in [1, $MaxRows] or 'auto', got $r")
         r
     }
-
-  private val docCount = scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private val ssjoinEstCache = scala.collection.concurrent.TrieMap.empty[String, Long]
 
   /** Seed count of an existing signature frame — geometry travels WITH
     * the asset (columns m0..m_{n-1}), so every consumer of a signature
@@ -416,12 +412,12 @@ object Dedup {
     })
 
   /** One full labeling build (the expensive path [[labeledDocs]] amortizes).
-    * `graft.dedup.checkpointDir`, when set, routes the CC loop through
-    * RELIABLE filesystem checkpoints (executor-loss-tolerant — the
+    * `graft.dedup.checkpointDir`, when set, routes the CC loop's state
+    * through RELIABLE filesystem checkpoints (executor-loss-tolerant — the
     * cluster-mode loop, exercised end-to-end by DedupSpec); unset, the
-    * loop uses localCheckpoint. The labeling is written to parquet before
-    * this returns, so the loop's final-round checkpoint files are
-    * immediately sweepable by the caller. */
+    * loop's rounds are local checkpoints. The labeling is written to
+    * parquet before the asset is read, so the loop's final-round
+    * checkpoint is then dead and its files are sweepable by the caller. */
   private def computeLabeledDocs(s: SparkSession, d: String): DataFrame = {
     // the signature is the materialized [[signatureTable]] asset — its
     // branches in candidateEdges rescan the narrow parquet, nothing to
@@ -648,7 +644,7 @@ object Dedup {
       // bound unless the caller explicitly raises it; the production twins
       // are q_dedup_ngram_capped / q_dedup_minhash.
       val maxDocs = s.conf.get("graft.dedup.ngram.maxDocs", "100000").toLong
-      val nDocs = t(s, d, "documents").count()
+      val nDocs = Tables.count(s, d, "documents")
       require(nDocs <= maxDocs,
         s"q_dedup_ngram is the uncapped exact-Jaccard baseline: $nDocs documents " +
           s"exceed the guard ($maxDocs). Use q_dedup_ngram_capped or q_dedup_minhash " +
@@ -934,14 +930,15 @@ object Dedup {
       // tier, whose cost is candidate-bounded by construction.
       val maxEst = s.conf.get("graft.ssjoin.maxCandPairs", "20000000").toLong
       // the bound is a pure function of the immutable dataset dir (conf
-      // only moves the BUDGET), so the aggregate runs once per JVM — the
-      // vecCount guard-cache precedent, keeping the guard's cost off
-      // every repeat invocation
-      val est = ssjoinEstCache.getOrElseUpdate(d,
+      // only moves the BUDGET), so the aggregate runs once per JVM, like
+      // the guard counts, keeping the guard's cost off every repeat
+      // invocation
+      val est = graft.Assets.once("ssjoin_candidate_bound", d) {
         prefixIndex(s, d)
           .groupBy(col("g")).agg(count(lit(1)).as("dfp"))
           .agg(coalesce(sum(expr("dfp * (dfp - 1) div 2")), lit(0L)))
-          .first().getLong(0))
+          .first().getLong(0)
+      }
       require(est <= maxEst,
         s"q_ssjoin_prefix: prefix-candidate upper bound $est exceeds the " +
           s"dense-vocabulary guard ($maxEst). This corpus's shingle " +

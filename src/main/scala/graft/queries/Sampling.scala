@@ -673,16 +673,21 @@ object Sampling {
     // uniform lang margins and uniform source margins (q_domain_mix
     // fixes one margin; raking fits both at once). Three full IPF
     // rounds, unrolled: scale rows to the lang target, then columns to
-    // the source target — each scaling is one margin-keyed aggregate
+    // the source target — each scaling is one margin-keyed window sum
     // over the CELL table (≤ |langs|·|sources| rows at any corpus size;
-    // the data is touched once for the cell counts) joined back
-    // broadcast. Margin sums of n·w run in DECIMAL(38,12) (the
-    // q_supplier_hhi discipline) so they are order-independent; all
-    // other arithmetic is per-cell doubles with a fixed tree, so the
-    // final weights are engine-identical.
+    // the data is touched once for the cell counts). A window sum instead
+    // of an aggregate joined back means each scaling reads its
+    // predecessor ONCE, so the six scalings are one lazy plan that grows
+    // linearly (the fixed-round PageRank shape): no loop session, no
+    // persist, no action at build time, nothing left cached. Margin sums
+    // of n·w run in DECIMAL(38,12) (the q_supplier_hhi discipline), which
+    // is exact, so their summation order cannot change them; all other
+    // arithmetic is per-cell doubles with a fixed tree, so the final
+    // weights are engine-identical.
     "q_raking" -> ((s, d) => {
+      import org.apache.spark.sql.Column
+      import org.apache.spark.sql.expressions.Window
       val d3812 = org.apache.spark.sql.types.DecimalType(38, 12)
-      val keep = Seq("lang", "source", "n", "w", "nn", "l", "srcs")
       val base = Tables.load(s, d, "documents")
         .filter(col("lang").isNotNull && col("source").isNotNull)
         .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
@@ -690,42 +695,15 @@ object Sampling {
         countDistinct(col("lang")).as("l"),
         countDistinct(col("source")).as("srcs"))
       val cells0 = base.withColumn("w", lit(1.0)).crossJoin(broadcast(tt))
-      // The IPF fold runs on the CELL table (≤ |langs|·|sources| rows),
-      // but 6 chained aggregate+join stages under the session-width
-      // shuffle and AQE are pure orchestration latency (per-stage stat
-      // jobs, 32-partition shuffles of 100 rows). The PageRank/CC
-      // loop-session discipline applies: clone the session, 1 shuffle
-      // partition, AQE off, persist per round so each scale() (which
-      // consumes its input twice — margin aggregate + join back) reads
-      // the cache instead of re-evaluating lineage.
-      val loopS = s.newSession()
-      loopS.conf.set("spark.sql.shuffle.partitions", "1")
-      loopS.conf.set("spark.sql.adaptive.enabled", "false")
-      val start = loopS.createDataFrame(cells0.rdd, cells0.schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      def scale(cells: org.apache.spark.sql.DataFrame, key: String,
-          tgt: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-        val g = cells.groupBy(col(key).as("mk"))
-          .agg(sum((col("n") * col("w")).cast(d3812)).cast("double").as("msum"))
-        cells.join(broadcast(g), col(key) === col("mk"))
-          .select(keep.filterNot(_ == "w").map(col) :+
-            (col("w") * (tgt / col("msum"))).as("w"): _*)
+      def scale(cells: DataFrame, key: String, tgt: Column): DataFrame = {
+        val msum = sum((col("n") * col("w")).cast(d3812))
+          .over(Window.partitionBy(col(key))).cast("double")
+        cells.withColumn("w", col("w") * (tgt / msum))
       }
       val rowT = col("nn").cast("double") / col("l").cast("double")
       val colT = col("nn").cast("double") / col("srcs").cast("double")
-      // Persist lifecycle (round-12 advice): each round's frame is read
-      // only by the NEXT round (twice, via scale), so materialize the new
-      // round eagerly — a count over the ≤|langs|·|sources| cell table on
-      // 1 shuffle partition, noise next to the IPF itself — and free the
-      // superseded predecessor; repeated invocations leave exactly one
-      // cell-table-sized block behind (the returned frame's input), not
-      // one per round per call.
-      val fitted = (1 to 3).foldLeft(start) { (c, _) =>
-        val next = scale(scale(c, "lang", rowT), "source", colT)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        c.unpersist(blocking = false)
-        next
+      val fitted = (1 to 3).foldLeft(cells0) { (c, _) =>
+        scale(scale(c, "lang", rowT), "source", colT)
       }
       fitted.select(col("lang"), col("source"), col("n"), col("w"),
           (col("n").cast("double") * col("w")).as("fitted"))

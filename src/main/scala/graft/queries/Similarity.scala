@@ -63,7 +63,7 @@ object Similarity {
   private def planesFor(s: SparkSession, d: String): Int =
     s.conf.get("graft.ann.lsh.planes", PLANES.toString) match {
       case "auto" =>
-        val n = vecCount.getOrElseUpdate(d, t(s, d, "embeddings").count())
+        val n = Tables.count(s, d, "embeddings")
         math.min(MaxPlanes, math.max(PLANES,
           math.ceil(math.log(math.max(1.0, n / 64.0)) / math.log(2.0)).toInt))
       case v =>
@@ -157,13 +157,6 @@ object Similarity {
     coded.withColumn("adc",
       (0 until PqM).map(m => col(s"term$m")).reduce(_ + _))
   }
-
-  /** Per-dataset-dir embedding row counts for the q_knn_join scale guard —
-    * one count job per dataset per JVM instead of one per query build.
-    * A dataset dir is immutable in this engine's convention (testdata and
-    * the GCS layout are append-by-new-partition), so staleness is not a
-    * correctness risk for a guard. */
-  private val vecCount = scala.collection.concurrent.TrieMap.empty[String, Long]
 
   private def planeLit(p: Int): String =
     if (p < PLANES)
@@ -308,12 +301,6 @@ object Similarity {
       computeNeighbors(s, d).write.mode("overwrite").parquet(out)
     })
 
-  /** q_ann_graph's query row (vector, norm, coarse cell) — 1 row of
-    * serving state, deterministic per dataset dir; collected once per JVM
-    * instead of once per invocation (the coarseModel precedent). */
-  private val graphQueryCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Array[Long], Long, Long)]
-
   /** One full neighbor-table build (the path [[neighborTable]] amortizes) —
     * exposed for the PlanSpec pin on the BUILD plan (bounded partial top-k,
     * no window sort) now that the registered queries' own plans are probes. */
@@ -415,10 +402,12 @@ object Similarity {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
 
-  /** Memoized query serving state for q_ann_graph (see
-    * [[graphQueryCache]]): vec 0's vector, norm and coarse cell. */
+  /** q_ann_graph's query row: vec 0's vector, norm and coarse cell — 1 row
+    * of serving state, deterministic per dataset dir, so it is collected
+    * once per JVM instead of once per invocation (the coarseModel
+    * precedent). */
   private def graphQueryState(s: SparkSession, d: String): (Array[Long], Long, Long) =
-    graphQueryCache.getOrElseUpdate(d, {
+    graft.Assets.once("ann_graph_query", d) {
       val coarse = coarseModel(s, d)
       val qRows = intVecs(s, d).filter(col("vec_id") === 0)
         .withColumn("cluster", graft.operators.KMeans.centArgmax(coarse))
@@ -426,7 +415,7 @@ object Similarity {
       require(qRows.nonEmpty,
         "q_ann_graph: query vector vec_id=0 missing from the embeddings table")
       (qRows(0).getSeq[Long](0).toArray, qRows(0).getLong(1), qRows(0).getLong(2))
-    })
+    }
 
   /** One full pair-scoring build (the path [[exactPairs]] amortizes). */
   private[graft] def computeExactPairs(s: SparkSession, d: String): DataFrame = {
@@ -1014,23 +1003,15 @@ object Similarity {
       val beam = s.conf.get("graft.ann.graph.beam", GraphBeam.toString).toInt
       // The walk is ≤(1+beam)·rounds TINY per-round stages — pure
       // orchestration latency under the session-width shuffle and AQE
-      // stat jobs, so the PageRank/raking loop-session discipline
-      // applies: clone the session, 1 shuffle partition, AQE off, and
-      // read EVERY input directly in the clone (an RDD port from the
-      // parent session would pay a row-encode round-trip per frame);
-      // persist each round (its frame is read by the anti-join, the
-      // frontier cut AND the final union — unpersisted lineage would
-      // re-evaluate the whole walk ~3^r times), free superseded
-      // predecessors eagerly. The persisted edge/vector frames are the
-      // local stand-in for what production serves as vec_id-bucketed
-      // index tables.
-      val loopS = s.newSession()
-      loopS.conf.set("spark.sql.shuffle.partitions", "1")
-      loopS.conf.set("spark.sql.adaptive.enabled", "false")
-      // the clone starts with a FRESH function registry — the scoring
-      // expression (graft_long_dot) must be registered there explicitly
-      // (Tables.load does it on first touch; this keeps it load-order-free)
-      graft.expressions.GraftFunctions.register(loopS)
+      // stat jobs, so it runs in a loop session (Loop.session: 1 shuffle
+      // partition, AQE off, graft functions registered) and reads EVERY
+      // input directly there (a frame moved in from the parent session
+      // would pay a row-encode round-trip). Each round is persisted (its
+      // frame is read by the anti-join, the frontier cut AND the final
+      // union — unpersisted lineage would re-evaluate the whole walk ~3^r
+      // times). The persisted edge/vector frames are the local stand-in
+      // for what production serves as vec_id-bucketed index tables.
+      val loopS = graft.operators.Loop.session(s, 1)
       // INDEX + SERVING STATE memoized per dataset (r15): the symmetrized
       // adjacency ([[graphEdgePath]] — HNSW links neighbors
       // bidirectionally; reverse edges make the kNN digraph navigable, and
@@ -1214,7 +1195,7 @@ object Similarity {
       // Count cached per dataset dir: the guard runs at query-build time,
       // and an uncached count() here would add a full table scan (an eager
       // driver-blocking job) to EVERY build even when the guard passes.
-      val nVecs = vecCount.getOrElseUpdate(d, t(s, d, "embeddings").count())
+      val nVecs = Tables.count(s, d, "embeddings")
       require(nVecs <= maxVecs,
         s"q_knn_join is the exact all-pairs kNN baseline: $nVecs vectors " +
           s"exceed the guard ($maxVecs). Use q_knn_join_ann at corpus scale, " +
@@ -1243,7 +1224,7 @@ object Similarity {
     // fixture where it flags exactly five planted label flips.
     "q_label_noise" -> ((s, d) => {
       val maxVecs = s.conf.get("graft.knn.exact.maxVecs", "100000").toLong
-      val nVecs = vecCount.getOrElseUpdate(d, t(s, d, "embeddings").count())
+      val nVecs = Tables.count(s, d, "embeddings")
       require(nVecs <= maxVecs,
         s"q_label_noise scores exact all-pairs kNN: $nVecs vectors exceed " +
           s"the guard ($maxVecs). Swap in ANN candidates at corpus scale, " +
@@ -1708,7 +1689,7 @@ object Similarity {
   private def semModel(s: SparkSession, d: String): graft.operators.KMeans.Model = {
     val k = s.conf.get("graft.semdedup.k", "8") match {
       case "auto" =>
-        val n = vecCount.getOrElseUpdate(d, t(s, d, "embeddings").count())
+        val n = Tables.count(s, d, "embeddings")
         math.max(8L, (n + 255L) / 256L).toInt
       case v =>
         val kk = v.toInt

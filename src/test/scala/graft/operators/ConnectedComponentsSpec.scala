@@ -1,6 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** [[Graph.connectedComponents]] against a driver-side union-find
   * reference, on the graph shapes that stress different parts of the
@@ -90,6 +94,42 @@ class ConnectedComponentsSpec extends SparkSpec {
       .flatMap(u => Option(u.listFiles()).map(_.toSeq).getOrElse(Nil))
       .filter(_.getName.startsWith("rdd-"))
     assert(rddDirs.size == 1, rddDirs.mkString(", "))
+  }
+
+  test("local mode leaves exactly one new persistent RDD: the final round") {
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val edges = (0L until 60L).map(i => (i, i + 1)) // needs several rounds
+    val labels = Graph.connectedComponents(edges.toDF("src", "dst"))
+    assert(labels.as[(Long, Long)].collect().toMap == reference(edges))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- rdds0
+    assert(added.size == 1, added.mkString(", "))
+    added.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
+  test("local mode stores the input and the loop's edge list DISK_ONLY") {
+    // both are edge-list sized; only the per-round labels may use the heap
+    val levels = new java.util.concurrent.ConcurrentHashMap[Int, StorageLevel]
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid)
+          .foreach(r => levels.put(r.id, r.storageLevel))
+    }
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val edges = (0L until 60L).map(i => (i, i + 1))
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val got = try {
+      val out = Graph.connectedComponents(edges.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toMap
+      TestBus.drain(spark.sparkContext)
+      out
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(got == reference(edges))
+    val seen = levels.asScala
+    assert(seen.values.count(_ == StorageLevel.DISK_ONLY) == 2, seen)
+    assert(seen.values.forall(Set(StorageLevel.DISK_ONLY, StorageLevel.MEMORY_AND_DISK)), seen)
+    (spark.sparkContext.getPersistentRDDs.keySet -- rdds0)
+      .foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
   }
 
   test("empty edge list yields empty labels") {

@@ -186,4 +186,29 @@ class PageRankSpec extends SparkSpec {
     val (plain, _) = PageRank.trainConverged(star.toDF("src", "dst"))
     assert(collect(ranks) == collect(plain))
   }
+
+  test("checkpointDir mode deletes superseded rounds, keeps the final one") {
+    val dir = tmpDir("graft-pr-sweep")
+    val star = (1 to 5).map(i => ("hub", s"leaf$i")) // 3 rounds
+    val (ranks, rounds) =
+      PageRank.trainConverged(star.toDF("src", "dst"), checkpointDir = Some(dir))
+    assert(rounds == 3)
+    assert(ranks.count() == 6)
+    // Spark lays out checkpoints as <dir>/<uuid>/rdd-<id>; only the final
+    // round's rdd dir (backing the returned frame) may remain.
+    val rddDirs = new java.io.File(dir).listFiles().toSeq
+      .flatMap(u => Option(u.listFiles()).map(_.toSeq).getOrElse(Nil))
+      .filter(_.getName.startsWith("rdd-"))
+    assert(rddDirs.size == 1, rddDirs.mkString(", "))
+  }
+
+  test("local mode leaves exactly one new persistent RDD: the final round") {
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val star = (1 to 5).map(i => ("hub", s"leaf$i")) // 3 rounds
+    val (ranks, _) = PageRank.trainConverged(star.toDF("src", "dst"))
+    assert(collect(ranks) == simulate(star, 10))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- rdds0
+    assert(added.size == 1, added.mkString(", "))
+    added.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+  }
 }

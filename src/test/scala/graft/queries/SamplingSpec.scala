@@ -281,6 +281,18 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(rows.map(_._5).sum - total) / total < 0.01)
   }
 
+  test("q_raking is one lazy plan: building starts no job, collecting caches nothing") {
+    val build = SparkEntry.queries("q_raking")
+    val want = build(spark, sf).collect() // tables and schemas resolved
+    spark.sharedState.cacheManager.clearCache()
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val (df, jobs) = jobsDuring(build(spark, sf))
+    assert(jobs == 0)
+    assert(df.collect().toSeq == want.toSeq)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("q_ldiversity flags the homogeneous group and clears the diverse one") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

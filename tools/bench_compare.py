@@ -4,8 +4,10 @@
 Usage: bench_compare.py OLD.json NEW.json [--threshold 1.5]
 
 Flags queries slower than threshold× the old time (ignoring sub-100ms
-noise) and queries that failed in NEW, lists new/removed queries, and
-prints totals.
+noise) and queries that failed in NEW, lists new/removed queries, prints
+totals, and prints each memoized asset's first-touch build seconds
+(`assets_s`) old -> new, the assets only one side built, and
+`value_plus_assets` (the total plus every asset build).
 """
 import argparse
 import json
@@ -81,6 +83,17 @@ def main() -> int:
         ot = sum(oq[q] for q in comparable)
         nt = sum(nq[q] for q in comparable)
         print(f"comparable-set total: {ot:.2f}s -> {nt:.2f}s ({nt/ot:.2f}x)")
+    oa, na = old.get("assets_s", {}), new.get("assets_s", {})
+    for name in sorted(set(oa) & set(na)):
+        print(f"asset {name}: {oa[name]:.2f}s -> {na[name]:.2f}s")
+    if set(na) - set(oa):
+        print("new assets: " +
+              ", ".join(f"{a}={na[a]:.2f}s" for a in sorted(set(na) - set(oa))))
+    if set(oa) - set(na):
+        print(f"removed assets: {', '.join(sorted(set(oa) - set(na)))}")
+    if "value_plus_assets" in old and "value_plus_assets" in new:
+        print(f"value_plus_assets: {old['value_plus_assets']:.2f}s -> "
+              f"{new['value_plus_assets']:.2f}s")
     return 1 if regressions or failed else 0
 
 
