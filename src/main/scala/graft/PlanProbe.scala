@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: execute one registered query at sf0.01 and print its executed
   * plan (post-AQE), for auditing pushdown/pruning/join strategy/exchange
   * reuse — `sbt "runMain graft.PlanProbe q_name"`. The automated guards
   * live in PlanSpec; this is for eyeballing a plan while iterating. */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val df = SparkEntry.queries(args(0))(spark, sf)

@@ -15,40 +15,10 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  private def tune(spark: SparkSession): Unit = {
-    // Older testdata generations wrote events.ts as parquet TIMESTAMP(NANOS)
-    // which Spark cannot read natively (PARQUET_TYPE_ILLEGAL); this legacy
-    // flag reads nanos as LongType so the loader can convert. Harmless for
-    // µs data, which reads as a timestamp type directly.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // ObjectHashAggregate falls back to SORT-BASED aggregation after 128
-    // distinct keys per task (the Spark default) — for this library's
-    // typed aggregates that is the wrong trade at ANY scale: every
-    // TypedImperativeAggregate here carries a BOUNDED buffer (TopK k-pair
-    // lists, sketches), so the hash map stays a few MB while the fallback
-    // re-sorts the whole input with per-row Kryo round-trips (the sf1
-    // scaling audit caught the knn_neighbors build parked in
-    // SortBasedAggregator — a 200M-pair input re-sorted for a 20k-key
-    // aggregate). 1M keys × a k-list ≈ tens of MB — far under executor
-    // memory. LIBRARY INVARIANT this session-global override rests on: no
-    // unbounded-buffer TypedImperativeAggregate ships in graft (no
-    // collect_list/collect_set over high-cardinality keys in any
-    // registered query — q_collect_agg's lists are group-bounded small).
-    // The raised threshold disables the sort-based OOM valve for EVERY
-    // typed aggregate in the session, so any future aggregate whose
-    // buffer grows with the group must either carry its own bound (the
-    // TopKAggregator pattern) or scope this conf back down around its
-    // queries.
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "1048576")
-    // Native expressions (sessions created with
-    // spark.sql.extensions=graft.expressions.GraftExtensions skip this).
-    graft.expressions.GraftFunctions.register(spark)
-  }
-
+  /** Table `name` under `sfDir`. Applies [[Session.setup]] first: a
+    * session graft did not create reaches the engine through here. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    tune(spark)
+    Session.setup(spark)
     val df = parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events")
         // Normalize events.ts to TimestampType regardless of how the testdata
@@ -141,6 +111,10 @@ object Tables {
     "documents" -> "doc_id", "embeddings" -> "vec_id",
     "part" -> "p_partkey")
 
+  /** Size window of a single-file table that [[fanout]] repartitions. */
+  private val FanoutMinBytes = 256L << 10
+  private val FanoutMaxBytes = 32L << 20
+
   /** SCALE-ADAPTIVE SCAN FAN-OUT (optimization guide §2.5 "input skew",
     * round-14 thread-dump finding): the driver's sf tables are each ONE
     * parquet file with ONE row group, so Spark plans exactly one scan task
@@ -154,14 +128,14 @@ object Tables {
     *
     * The decision derives from the INPUT LAYOUT, not from local-mode
     * constants: it fires only when the table path is a single file small
-    * enough that Spark would plan one task (≤ graft.scan.fanout.maxBytes,
-    * default 32 MB — a threshold no production table file sits under) yet
-    * big enough to carry real map work (≥ graft.scan.fanout.minBytes,
-    * default 256 KB — region/nation/supplier-sized dims stay broadcast-
-    * shaped single tasks). Width = the session shuffle width, so the added
-    * exchange aligns with every downstream requirement and shrinks with
-    * the driver's lower-core PERF runs. On a real multi-file table the
-    * path is a directory → `isFile` is false → the plan is untouched.
+    * enough that Spark would plan one task (≤ [[FanoutMaxBytes]], 32 MB —
+    * a threshold no production table file sits under) yet big enough to
+    * carry real map work (≥ [[FanoutMinBytes]], 256 KB — region/nation/
+    * supplier-sized dims stay broadcast-shaped single tasks). Width = the
+    * session shuffle width, so the added exchange aligns with every
+    * downstream requirement and shrinks with lower-core runs. On a real
+    * multi-file table the path is a directory → `isFile` is false → the
+    * plan is untouched.
     * `graft.scan.fanout=off` disables. Filters and column pruning push
     * THROUGH RepartitionByExpression (PushDownPredicates handles
     * RepartitionOperation), so parquet PushedFilters/ReadSchema are
@@ -172,9 +146,7 @@ object Tables {
     val key = fanoutKey.getOrElse(name, return df)
     val f = new java.io.File(s"$sfDir/$name.parquet")
     if (!f.isFile) return df
-    val minB = spark.conf.get("graft.scan.fanout.minBytes", "262144").toLong
-    val maxB = spark.conf.get("graft.scan.fanout.maxBytes", "33554432").toLong
-    if (f.length < minB || f.length > maxB) return df
+    if (f.length < FanoutMinBytes || f.length > FanoutMaxBytes) return df
     val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     if (n < 2) df else df.repartition(n, col(key))
   }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Codegen'd integer dot product over two `array<bigint>` columns.
   *
@@ -388,68 +387,26 @@ case class CentArgmaxExpr(children: Seq[Expression]) extends Expression {
   override def prettyName: String = "graft_cent_argmax"
 }
 
-/** Registration for graft's native expressions.
-  *
-  * Preferred route: `spark.sql.extensions=graft.expressions.GraftExtensions`
-  * (injectFunction). [[GraftFunctions.register]] is the runtime fallback for
-  * sessions created without the conf (e.g. the driver harness).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.longDotDescriptor)
-    ext.injectFunction(GraftFunctions.levenshteinDescriptor)
-    ext.injectFunction(GraftFunctions.nfcDescriptor)
-    ext.injectFunction(GraftFunctions.bucketDescriptor)
-    ext.injectFunction(GraftFunctions.md5U32Descriptor)
-    ext.injectFunction(GraftFunctions.langTriDescriptor)
-    ext.injectFunction(GraftFunctions.centArgmaxDescriptor)
-  }
-}
-
+/** graft's native functions, registered into a session by [[graft.Session.setup]]. */
 object GraftFunctions {
-  val longDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_long_dot"),
-      new ExpressionInfo(classOf[LongDot].getName, "graft_long_dot"),
-      (children: Seq[Expression]) => LongDot(children.head, children(1)))
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val levenshteinDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_levenshtein"),
-      new ExpressionInfo(classOf[TrimmedLevenshtein].getName, "graft_levenshtein"),
-      (children: Seq[Expression]) => TrimmedLevenshtein(children.head, children(1)))
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  val nfcDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head))
-
-  val bucketDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_bucket"),
-      new ExpressionInfo(classOf[EquiDepthBucket].getName, "graft_bucket"),
-      (children: Seq[Expression]) => EquiDepthBucket(children.head, children(1)))
-
-  val md5U32Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_md5_u32"),
-      new ExpressionInfo(classOf[Md5UInt32].getName, "graft_md5_u32"),
-      (children: Seq[Expression]) => Md5UInt32(children.head))
-
-  val langTriDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_lang_tri"),
-      new ExpressionInfo(classOf[LangTriScoresExpr].getName, "graft_lang_tri"),
-      (children: Seq[Expression]) => LangTriScoresExpr(children.head))
-
-  val centArgmaxDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("graft_cent_argmax"),
-      new ExpressionInfo(classOf[CentArgmaxExpr].getName, "graft_cent_argmax"),
-      (children: Seq[Expression]) => CentArgmaxExpr(children))
+  val descriptors: Seq[Descriptor] = Seq(
+    fn("graft_long_dot", classOf[LongDot])(c => LongDot(c.head, c(1))),
+    fn("graft_levenshtein", classOf[TrimmedLevenshtein])(c => TrimmedLevenshtein(c.head, c(1))),
+    fn("graft_nfc", classOf[NfcNormalize])(c => NfcNormalize(c.head)),
+    fn("graft_bucket", classOf[EquiDepthBucket])(c => EquiDepthBucket(c.head, c(1))),
+    fn("graft_md5_u32", classOf[Md5UInt32])(c => Md5UInt32(c.head)),
+    fn("graft_lang_tri", classOf[LangTriScoresExpr])(c => LangTriScoresExpr(c.head)),
+    fn("graft_cent_argmax", classOf[CentArgmaxExpr])(c => CentArgmaxExpr(c)))
 
   /** Idempotent session-level registration. */
   def register(spark: SparkSession): Unit =
-    Seq(longDotDescriptor, levenshteinDescriptor, nfcDescriptor,
-      bucketDescriptor, md5U32Descriptor, langTriDescriptor,
-      centArgmaxDescriptor)
-      .foreach { case (fid, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(fid)) {
+    descriptors.foreach { case (fid, info, builder) =>
+      if (!spark.sessionState.functionRegistry.functionExists(fid))
         spark.sessionState.functionRegistry.registerFunction(fid, info, builder)
-      }
     }
 }

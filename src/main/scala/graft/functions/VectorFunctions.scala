@@ -22,7 +22,7 @@ object VectorFunctions {
 
   /** Exact integer dot product of two scaled vectors — the codegen'd
     * [[graft.expressions.LongDot]] native expression (registered by
-    * [[graft.Tables.load]]); ~20× the interpreted
+    * [[graft.Session.setup]]); ~20× the interpreted
     * `aggregate(zip_with(...))` equivalent on pair joins. */
   def dotL(a: String, b: String): Column =
     expr(s"graft_long_dot($a, $b)")

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -157,17 +157,8 @@ object DatasetConvention {
     if (!fs.exists(new Path(root))) return emptyConvention(spark)
     // List first on BOTH paths: an existing-but-fileless root would make
     // spark.read.json throw "unable to infer schema" instead of returning
-    // the promised empty DataFrame. Only files Spark's reader would
-    // actually see count — '.'/'_'-prefixed names (markers like _SUCCESS,
-    // compaction's .compact-* leftovers) are ignored by the scan, so a root
-    // holding nothing else must take the empty path too.
-    val qualifiedRoot = fs.makeQualified(new Path(root)).toString
-    val it = fs.listFiles(new Path(root), true)
-    val allFiles = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath.toString)
-      .filter(p => !p.stripPrefix(qualifiedRoot).stripPrefix("/").split('/')
-        .exists(seg => seg.startsWith(".") || seg.startsWith("_")))
-      .toSeq
+    // the promised empty DataFrame.
+    val allFiles = visibleFiles(fs, root).map(_.getPath.toString).toSeq
     if (allFiles.isEmpty) return emptyConvention(spark, dataSchema)
     // Explicit schema skips inference entirely (Spark appends the
     // discovered partition columns to a user schema that omits them).
@@ -216,17 +207,25 @@ object DatasetConvention {
       val dir = s"$root/version=$v"
       // An existing-but-fileless version dir would make schema inference
       // throw — skip it, matching read()'s empty-root discipline.
-      val it = fs.listFiles(new Path(dir), true)
-      val hasFiles = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .exists(st => !st.getPath.getName.startsWith(".") &&
-          !st.getPath.getName.startsWith("_"))
-      if (hasFiles)
+      if (visibleFiles(fs, dir).nonEmpty)
         Some(dataSchema.foldLeft(spark.read.option("basePath", root))(_ schema _)
           .json(dir))
       else None
     }
     if (frames.isEmpty) emptyConvention(spark, dataSchema)
     else frames.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The files under `dir` that Spark's reader sees: those with no path
+    * segment below `dir` starting with '.' or '_' (markers like _SUCCESS,
+    * an in-flight write's _temporary/, compaction's .compact-* leftovers
+    * are all skipped by the scan). */
+  private def visibleFiles(fs: FileSystem, dir: String): Iterator[LocatedFileStatus] = {
+    val qualified = fs.makeQualified(new Path(dir)).toString
+    val it = fs.listFiles(new Path(dir), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(st => !st.getPath.toString.stripPrefix(qualified).stripPrefix("/").split('/')
+        .exists(seg => seg.startsWith(".") || seg.startsWith("_")))
   }
 
   /** Empty read result: no rows, the caller-declared data columns (when
@@ -284,9 +283,7 @@ object DatasetConvention {
                      dataset: String): Seq[(Partition, Int, Long)] = {
     val root = s"$base/$dataset"
     val fs = FileSystem.get(new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(root), true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filter(st => !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
+    visibleFiles(fs, root)
       .flatMap(st => parsePartition(st.getPath.toString).map(_ -> st.getLen))
       .toSeq
       .groupBy(_._1)

@@ -33,13 +33,14 @@ private[graft] object Loop {
     * the caller's conf is never touched. It runs `parts` shuffle partitions
     * with AQE off (AQE's per-stage statistics jobs are pure latency on
     * small state with a chosen partitioning: they more than triple the
-    * job count of connected components), and has the graft functions
-    * registered (a new session starts with a fresh function registry). */
+    * job count of connected components), and carries the session
+    * contract (a new session starts with a fresh conf and function
+    * registry, so [[graft.Session.setup]] runs on it). */
   def session(s: SparkSession, parts: Int): SparkSession = {
     val loopS = s.newSession()
     loopS.conf.set("spark.sql.shuffle.partitions", parts.toString)
     loopS.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.expressions.GraftFunctions.register(loopS)
+    graft.Session.setup(loopS)
     loopS
   }
 

@@ -97,7 +97,7 @@ object ZOrder {
     * skew cannot collapse the curve). */
   def layout(df: DataFrame, colA: String, colB: String,
              numFiles: Int = 8, buckets: Int = 64): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
+    graft.Session.setup(df.sparkSession)
     val probs = (1 until buckets).map(_.toDouble / buckets).toArray
     // ONE sketch pass over both columns (the multi-column approxQuantile
     // overload merges per-partition sketches for every column in a
@@ -140,7 +140,7 @@ object ZOrder {
     * generalized to k dims via [[zAddressK]]. */
   def layoutK(df: DataFrame, cols: Seq[String],
               numFiles: Int = 8, buckets: Int = 64): DataFrame = {
-    graft.expressions.GraftFunctions.register(df.sparkSession)
+    graft.Session.setup(df.sparkSession)
     val probs = (1 until buckets).map(_.toDouble / buckets).toArray
     // one job sketches ALL k dimensions — k passes collapsed to 1
     val cuts = df.stat.approxQuantile(cols.toArray, probs, 0.01).toSeq

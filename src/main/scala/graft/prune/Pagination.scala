@@ -60,21 +60,13 @@ object Pagination {
   }
 
   /** First call: materialize `query` (sorted by `sortCols`, indexed, range
-    * partitioned) under `destDir`, count it once, return page 0 + token. */
+    * partitioned) under `destDir`, count it once, return page 0 + token.
+    * zipWithIndex keeps the sort's partition order: partition k's rows get
+    * indices after partition k-1's — a contiguous global index without a
+    * global window. */
   def firstPage(query: DataFrame, sortCols: Seq[String], pageSize: Int,
-                destDir: String): Page = {
-    val spark = query.sparkSession
-    val sorted = query.orderBy(sortCols.map(col): _*)
-    // zipWithIndex keeps the sort's partition order: partition k's rows get
-    // indices after partition k-1's — a contiguous global index without a
-    // global window.
-    val indexed = spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
-      sorted.schema.add(IdxCol, LongType, nullable = false))
-    indexed.write.mode(SaveMode.Overwrite).parquet(destDir)
-    val total = Tables.parquet(spark, destDir).count() // once; metadata-only scan
-    pageAt(spark, Token(destDir, 0L, pageSize, total))
-  }
+                destDir: String): Page =
+    firstPage(query.orderBy(sortCols.map(col): _*), pageSize, destDir)
 
   /** UNORDERED first call — full reference parity for `query_paginated`
     * on arbitrary SELECTs (bq.py:193-215 pages ANY query because BigQuery
@@ -100,10 +92,6 @@ object Pagination {
     * entirely (≙ bq.py:198-204), range-read the materialized destination. */
   def nextPage(spark: SparkSession, token: String): Page =
     pageAt(spark, decode(token))
-
-  /** Back-compat shim: sort columns are baked into the materialization. */
-  def nextPage(spark: SparkSession, token: String, sortCols: Seq[String]): Page =
-    nextPage(spark, token)
 
   /** End-of-cursor cleanup: drop the materialized destination. BigQuery's
     * destination tables expire server-side (24 h TTL); the local parquet

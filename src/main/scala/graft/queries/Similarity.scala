@@ -81,9 +81,8 @@ object Similarity {
     IndexedSeq.fill(MaxPlanes - PLANES, 64)(if (rnd.nextBoolean()) 1 else -1)
   }
 
-  /** Graph-ANN geometry (q_ann_graph): beam width (default, overridable
-    * via graft.ann.graph.beam — the oracle replays the default) and the
-    * fixed greedy-search round count (fixed so the oracle can unroll). */
+  /** Graph-ANN geometry (q_ann_graph): beam width and the fixed
+    * greedy-search round count (both fixed so the oracle can unroll). */
   private val GraphBeam = 8
   private val GraphRounds = 3
 
@@ -992,15 +991,12 @@ object Similarity {
     // point lookups, never scanned, never shuffled; rounds are FIXED so
     // the DuckDB oracle replays the walk as chained CTEs. Output: top-5
     // of all scored nodes with the hop each was first reached at (each
-    // id is scored exactly once, so hop is well-defined). Beam width via
-    // graft.ann.graph.beam (the ivfpq-nprobe knob pattern; the oracle
-    // replays the default). Recall vs the exact top-5 is a row in
-    // q_ann_recall_panel, and ≥ the trained-IVF leg on the clustered
-    // fixture (QueriesSpec) — the greedy walk reaches across Voronoi
-    // boundaries the cell probe cannot.
+    // id is scored exactly once, so hop is well-defined). Recall vs the
+    // exact top-5 is a row in q_ann_recall_panel, and ≥ the trained-IVF
+    // leg on the clustered fixture (QueriesSpec) — the greedy walk
+    // reaches across Voronoi boundaries the cell probe cannot.
     "q_ann_graph" -> ((s, d) => {
       import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val beam = s.conf.get("graft.ann.graph.beam", GraphBeam.toString).toInt
       // The walk is ≤(1+beam)·rounds TINY per-round stages — pure
       // orchestration latency under the session-width shuffle and AQE
       // stat jobs, so it runs in a loop session (Loop.session: 1 shuffle
@@ -1046,7 +1042,7 @@ object Similarity {
         visited = visited.unionByName(scored)
         if (r < GraphRounds)
           frontier = scored.orderBy(col("cos").desc, col("vec_id").asc)
-            .limit(beam).select(col("vec_id"))
+            .limit(GraphBeam).select(col("vec_id"))
       }
       // ONE eager pass materializes the whole walk (every round cache
       // fills here); the index stand-ins are then dead weight — freed

@@ -36,7 +36,7 @@ object VectorsStream {
   /** (vec_id, label, code0..code{M-1}) under the FROZEN per-subspace
     * codebooks. Works identically on a batch frame — the spec runs both
     * paths through this one definition and asserts equality. Requires the
-    * `graft_long_dot` expression (registered by [[graft.Tables.load]]). */
+    * `graft_long_dot` expression (registered by [[graft.Session.setup]]). */
   def pqEncode(vecs: DataFrame, models: Seq[KMeans.Model],
                subDims: Int): DataFrame = {
     val iv = vecs.select(col("vec_id"), col("label"),

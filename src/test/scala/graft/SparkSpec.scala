@@ -7,19 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM per forked test run). */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+  lazy val spark: SparkSession = Session.local(4,
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString,
     // raw local FS (no .crc sidecars): the dataset convention's padded file
     // names contain ':' which Hadoop's ChecksumFileSystem cannot sidecar;
     // object stores (the production target) have no checksum wrapper.
-    .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    .getOrCreate()
+    "spark.hadoop.fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

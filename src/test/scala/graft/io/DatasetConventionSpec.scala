@@ -112,6 +112,21 @@ class DatasetConventionSpec extends SparkSpec {
       .filter(col("version") === 2).count() == 1)
   }
 
+  test("an in-flight append's _temporary files are invisible to read, readVersions and partitionStats") {
+    import spark.implicits._
+    val base = tmpDir("dsinflight")
+    append(Seq((1L, "x")).toDF("id", "v"), base, "ds", 1, frozen)
+    val inflight = java.nio.file.Paths.get(base, "ds", partitionFor(2, frozen).path,
+      "_temporary", "0")
+    java.nio.file.Files.createDirectories(inflight)
+    java.nio.file.Files.writeString(inflight.resolve("part-0.json"), """{"id":2,"v":"y"}""")
+
+    assert(read(spark, base, "ds").select("id").as[Long].collect().toSeq == Seq(1L))
+    assert(readVersions(spark, base, "ds").select("id", "version").as[(Long, Int)]
+      .collect().toSeq == Seq((1L, 1)))
+    assert(partitionStats(spark, base, "ds").map(_._1) == Seq(partitionFor(1, frozen)))
+  }
+
   test("readVersions of a missing dataset is the convention-empty frame") {
     val df = readVersions(spark, tmpDir("dsver-none"), "nope")
     assert(df.isEmpty &&

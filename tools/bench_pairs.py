@@ -8,10 +8,13 @@ For each seed in A..B (inclusive) this runs `python3 bench/run.py
 --workload W --seed N --seconds S --trace 0` once in each checkout (S is the
 `run_seconds` of the parent's BENCHMARK.json), alternating which side runs
 first, and then prints, for every end-to-end metric in BENCHMARK.json: each side's median and quartiles, the ratio of
-the medians, the range of the per-pair ratios, and the pairs the change won
-(k/n; ties count for neither side). A run that is not `correct` or has a
-failed op is reported and makes the exit status 1. The benchmark itself is
-only run, never modified.
+the medians, the range of the per-pair ratios, the pairs the change won
+(k/n; ties count for neither side) and a verdict against the metric's
+`bound`: `within bound` or `WORSE than bound` by the ratio of the medians,
+or `unresolved` when the parent's own spread (IQR / median) exceeds the
+bound, unless every change run beats every parent run. A run that is not
+`correct` or has a failed op is reported and makes the exit status 1. The
+benchmark itself is only run, never modified.
 
 Create the two checkouts with `git worktree add DIR COMMIT` or `git clone`,
 never with `cp -r` of a built tree: sbt's incremental-compile state in
@@ -44,6 +47,17 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def verdict(parent, change, bound, lower):
+    """`within bound`, `WORSE than bound` or `unresolved` for one metric."""
+    pm, cm = statistics.median(parent), statistics.median(change)
+    q1, q3 = quartiles(parent)
+    beats_all = max(change) < min(parent) if lower else min(change) > max(parent)
+    if pm and (q3 - q1) / pm > bound and not beats_all:
+        return "unresolved"
+    worse = (cm / pm - 1 if lower else 1 - cm / pm) if pm else 0.0
+    return "WORSE than bound" if worse > bound else "within bound"
 
 
 def seed_range(text):
@@ -84,7 +98,7 @@ def main():
     n = len(args.seeds)
     print(f"\n{args.workload}, {n} pairs; ratio = change / parent")
     print(f"{'metric':18s} {'parent median [q1, q3]':>30s} {'change median [q1, q3]':>30s} "
-          f"{'ratio':>7s} {'pair ratios':>15s} {'wins':>6s}")
+          f"{'ratio':>7s} {'pair ratios':>15s} {'wins':>6s}  verdict (bound)")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         p, c = vals["parent"][name], vals["change"][name]
@@ -97,7 +111,8 @@ def main():
             return f"{med:.3f} [{q1:.3f}, {q3:.3f}]"
         print(f"{name:18s} {show(p, pm):>30s} {show(c, cm):>30s} "
               f"{cm / pm if pm else float('nan'):7.3f} "
-              f"{min(ratios):7.3f}-{max(ratios):.3f} {wins:>3d}/{n}")
+              f"{min(ratios):7.3f}-{max(ratios):.3f} {wins:>3d}/{n}  "
+              f"{verdict(p, c, m['bound'], lower)} ({m['bound']})")
     if bad:
         print(f"\n{bad} run(s) not correct or with failed ops", file=sys.stderr)
     return 1 if bad else 0
