@@ -337,7 +337,9 @@ object Dedup {
     * single key's pairs are still generated); the cap removes the
     * quadratic work itself. Pair CONSUMERS that score each candidate pair
     * (q_dedup_minhash, fuzzy/estimate reranks) keep the exact [[bandPairs]]
-    * list; component resolution only needs connectivity. */
+    * list; component resolution only needs connectivity. The edges are a
+    * lazy plan: their one store is the input cache of
+    * [[graft.operators.Graph.connectedComponents]]. */
   private[graft] def candidateEdges(sig: DataFrame, bucketCap: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sigCols = (0 until seedsOf(sig)).map(o => col(s"m$o"))
@@ -353,7 +355,6 @@ object Dedup {
     val keyed = sig
       .withColumn("sk", concat_ws("|", sigCols: _*))
       .withColumn("rdoc", min(col("doc_id")).over(wSig))
-      .persist(StorageLevel.DISK_ONLY)
     val sigStars = keyed.filter(col("doc_id") =!= col("rdoc"))
       .select(col("rdoc").as("src"), col("doc_id").as("dst"))
     val repSig = keyed.filter(col("doc_id") === col("rdoc"))
@@ -378,17 +379,7 @@ object Dedup {
       .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
     val starEdges = bs.filter(col("bsz") > bucketCap && col("doc_id") =!= col("bmin"))
       .select(col("bmin").as("src"), col("doc_id").as("dst"))
-    // Materialize the edge list EAGERLY so the intermediate keyed-signature
-    // cache (consumed by three branches above) can be released here instead
-    // of leaking for the session lifetime — this is a reusable helper, not
-    // a one-shot query. The returned frame is persisted DISK_ONLY; callers
-    // unpersist it once downstream state no longer reads it (q_dedup_resolve
-    // does so right after connectedComponents checkpoints its final round).
-    val edges = smallPairs.union(starEdges).union(sigStars).distinct()
-      .persist(StorageLevel.DISK_ONLY)
-    edges.count()
-    keyed.unpersist(blocking = false)
-    edges
+    smallPairs.union(starEdges).union(sigStars).distinct()
   }
 
   /** (doc_id, source, n_chars, component) — every document labeled with its
@@ -422,10 +413,9 @@ object Dedup {
     // the signature is the materialized [[signatureTable]] asset — its
     // branches in candidateEdges rescan the narrow parquet, nothing to
     // persist or release here
-    val edges = candidateEdges(signatureTable(s, d))
-    val labels = graft.operators.Graph.connectedComponents(edges,
+    val labels = graft.operators.Graph.connectedComponents(
+      candidateEdges(signatureTable(s, d)),
       checkpointDir = s.conf.getOption("graft.dedup.checkpointDir"))
-    edges.unpersist(blocking = false)
     t(s, d, "documents").select(col("doc_id"), col("source"), col("n_chars"))
       .join(labels, col("doc_id") === col("doc"), "left")
       .select(col("doc_id"), col("source"), col("n_chars"),
@@ -541,14 +531,12 @@ object Dedup {
       val docs = tf(s, d, "documents") // span-shingle explode: fanned scan (r14)
         .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
       // (doc_id, p, k): every SpanL-token shingle with its 1-based start.
-      // Two consumers (df aggregate + semi back): persist once.
       val sh = docs.filter(size(col("w")) >= SpanL)
         .select(col("doc_id"), explode(expr(
           s"transform(sequence(1, size(w) - ${SpanL - 1}), " +
             s"p -> struct(p AS p, concat_ws(' ', slice(w, p, $SpanL)) AS k))"))
           .as("x"))
         .select(col("doc_id"), col("x.p").as("p"), col("x.k").as("k"))
-        .persist(StorageLevel.DISK_ONLY)
       val dupk = sh.groupBy(col("k"))
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2).select(col("k"))
@@ -570,17 +558,13 @@ object Dedup {
       // LEFT join from the full corpus: a fully-covered doc keeps its row
       // with cleaned_text = '' (it was removed in toto, the Lee et al.
       // degenerate case), and docs shorter than SpanL pass through whole
-      val out = docs
+      docs
         .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"))
         .join(ka, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_tokens"),
           (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_removed"),
           coalesce(col("cleaned"), lit("")).as("cleaned_text"))
         .orderBy(col("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      sh.unpersist(blocking = false)
-      out
     }),
 
     // WINNOWING fingerprints (Schleimer, Wilkerson & Aiken 2003 — the

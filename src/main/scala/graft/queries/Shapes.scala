@@ -887,8 +887,8 @@ object Shapes {
     // frontier⋈edges equi-join plus LEFT ANTI de-visits — the standard
     // distributed BFS round, shuffles keyed on node ids and the frontier
     // only ever holds one hop's nodes. At 100 TB the same loop runs to
-    // depth k with the visited set as the only growing state (and the
-    // Graph.truncate checkpoint idiom bounds its lineage).
+    // depth k with the visited set as the only growing state (and
+    // Loop.fixpoint's per-round cut bounds its lineage).
     "q_bfs_reach" -> ((s, d) => {
       val li = t(s, d, "lineitem")
         .filter(col("l_shipdate") >= to_timestamp(lit("2000-01-01")) &&
@@ -925,14 +925,13 @@ object Shapes {
     // here unrolled twice so the DuckDB oracle replays it as chained
     // CTEs. All distances are sums computed in the identical order in
     // both engines (d_prev + w), so the doubles are bit-identical. At
-    // 100 TB the same round iterates under the Graph.truncate checkpoint
-    // idiom with the distance table as the only growing state.
+    // 100 TB the same round iterates under Loop.fixpoint with the
+    // distance table as the only growing state.
     "q_shortest_path" -> ((s, d) => {
       val pc = coPurchaseEdges(s, d)
       val e = pc.select(col("a"), col("b"), (lit(1.0) / col("cnt")).as("w"))
         .unionByName(pc.select(col("b").as("a"), col("a").as("b"),
           (lit(1.0) / col("cnt")).as("w")))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       // empty-shard degrade: min over zero edges is NULL — drop it so the
       // query yields an empty result instead of a phantom (null, 0.0) row
       val d0 = e.agg(min(col("a")).as("n")).select(col("n"), lit(0.0).as("dist"))
@@ -942,14 +941,9 @@ object Shapes {
             e.as("ed").join(dk.as("dd"), col("ed.a") === col("dd.n"))
               .select(col("ed.b").as("n"), (col("dd.dist") + col("ed.w")).as("dist")))
           .groupBy(col("n")).agg(min(col("dist")).as("dist"))
-      val out = relax(relax(d0))
+      relax(relax(d0))
         .select(col("n").as("part"), col("dist"))
         .orderBy(col("dist"), col("part"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      // reached-set-sized result materialized eagerly, edge cache released
-      out.count()
-      e.unpersist(blocking = false)
-      out
     }),
 
     // Community detection via synchronous label propagation (Raghavan et
@@ -965,13 +959,12 @@ object Shapes {
     // engine-independent; LPA-to-convergence is not deterministic across
     // engines without this). Each round is one edge⋈labels equi-join plus
     // two map-side-combinable aggregates — the same per-round cost as the
-    // components loop; at 100 TB the rounds run under the
-    // Graph.truncate checkpoint idiom (operators/Graph.scala) with
-    // edge-count-sized shuffles. Output: the community census.
+    // components loop; at 100 TB the rounds run under Loop.fixpoint
+    // (operators/Loop.scala) with edge-count-sized shuffles. Output: the
+    // community census.
     "q_label_prop" -> ((s, d) => {
       val e0 = coPurchaseEdges(s, d).select(col("a"), col("b"))
       val und = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       def step(labels: DataFrame): DataFrame =
         und.as("e").join(labels.as("lb"), col("e.b") === col("lb.n"))
           .groupBy(col("e.a").as("a"), col("lb.lbl").as("l"))
@@ -981,17 +974,9 @@ object Shapes {
           .select(col("a").as("n"), (-col("m.neg")).as("lbl"))
       val l0 = und.select(col("a").as("n")).distinct()
         .select(col("n"), col("n").as("lbl"))
-      val l2 = step(step(l0))
-      val out = l2.groupBy(col("lbl").as("community"))
+      step(step(l0)).groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("n_nodes").desc, col("community"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      // materialize the community-sized result eagerly, then release the
-      // edge cache (3 consumers) — the q_dup_spans discipline; the small
-      // persisted census is the residue.
-      out.count()
-      und.unpersist(blocking = false)
-      out
     }),
 
     // k-core peel (k=3, 2 rounds) — the DENSITY member of the graph
@@ -1002,9 +987,9 @@ object Shapes {
     // one degree aggregate + two LEFT SEMI equi-joins — the Pregel peel
     // round; 2 fixed rounds unrolled so the DuckDB oracle replays them
     // as chained CTEs (peel-to-fixpoint iterates the same round under
-    // the Graph.truncate checkpoint idiom at scale). Output: the
-    // (round, nodes, edges) shrink census — how much graph survives each
-    // peel. Shuffles are node/edge-keyed only; no window, no collect.
+    // Loop.fixpoint at scale). Output: the (round, nodes, edges) shrink
+    // census — how much graph survives each peel. Shuffles are
+    // node/edge-keyed only; no window, no collect.
     "q_kcore" -> ((s, d) => {
       val k = 3
       // the memoized asset replaces the per-query persist: rescans of e0
@@ -1024,14 +1009,9 @@ object Shapes {
         und(e).select(col("a")).distinct().agg(count(lit(1)).as("n_nodes"))
           .crossJoin(e.agg(count(lit(1)).as("n_edges")))
           .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
-      val e1 = peel(e0).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val e2 = peel(e1)
-      val out = census(e0, 0).unionByName(census(e1, 1))
-        .unionByName(census(e2, 2)).orderBy(col("round"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      out.count()
-      e1.unpersist(blocking = false)
-      out
+      val e1 = peel(e0)
+      census(e0, 0).unionByName(census(e1, 1))
+        .unionByName(census(peel(e1), 2)).orderBy(col("round"))
     }),
 
     // Heavy hitters via count-min sketch — the frequency member of the

@@ -810,41 +810,16 @@ object Similarity {
             coalesce(col("h"), lit(0L)).as("hits"),
             (coalesce(col("h"), lit(0L)).cast("double") / lit(5.0))
               .as("recall"))
-      // The five legs still compose the REGISTERED family queries verbatim
-      // (the integrity property the panel exists for), but each leg's
-      // frame is now BUILT AND MATERIALIZED on its own driver thread into
-      // a cache the union then reads (guide §2.6 — the legs are
-      // independent jobs, and the panel previously serialized them: the
-      // graph walk's eager loop ran start-to-finish before any other
-      // leg's first task, on a box with 31 idle cores). Job descriptions
-      // are thread-local, so each leg labels its own jobs; results are
-      // unchanged — the same five frames, just filled concurrently.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      val legs =
-        try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          def built(family: String, mk: => DataFrame) = Future {
-            s.sparkContext.setJobDescription(s"q_ann_recall_panel: $family leg")
-            val df = mk.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            df.count()
-            family -> df
-          }
-          Await.result(Future.sequence(Seq(
-            built("ivf_trained", queries("q_ann_ivf_trained")(s, d)),
-            built("lsh", queries("q_ann_lsh")(s, d)),
-            built("prefix", queries("q_ann_prefix")(s, d)),
-            built("graph", queries("q_ann_graph")(s, d)),
-            // the NND index's own answer for the query: vec 0's top-5
-            // list — the index-quality leg next to the walk that
-            // searches it
-            built("nnd_knn", queries("q_ann_nnd")(s, d)
-              .filter(col("vec_id") === 0)
-              .select(col("nbr_id").as("vec_id"))))),
-            scala.concurrent.duration.Duration(10, "min"))
-        } finally pool.shutdown()
-      legs.map { case (f, df) => leg(f, df) }
+      Seq(
+        leg("ivf_trained", queries("q_ann_ivf_trained")(s, d)),
+        leg("lsh", queries("q_ann_lsh")(s, d)),
+        leg("prefix", queries("q_ann_prefix")(s, d)),
+        leg("graph", queries("q_ann_graph")(s, d)),
+        // the NND index's own answer for the query: vec 0's top-5 list —
+        // the index-quality leg next to the walk that searches it
+        leg("nnd_knn", queries("q_ann_nnd")(s, d)
+          .filter(col("vec_id") === 0)
+          .select(col("nbr_id").as("vec_id"))))
         .reduce(_.unionByName(_))
         .orderBy(col("family"))
     }),

@@ -28,12 +28,14 @@ object Sources {
     // Sink → source identity through the partitioned-JSONL convention
     // (≙ add_records_to_dataset then get_dataset, gcs.py:162-218/523-597):
     // documents written under {base}/docs/version=1/year=…/… and read back
-    // via partition discovery must reproduce the table exactly.
+    // via partition discovery must reproduce the table exactly. The write
+    // is a memoized asset (once per dataset dir); the query is the read.
     "q_dataset_roundtrip" -> ((s, d) => {
-      val base = graft.Assets.tempDir("graft-ds")
-      DatasetConvention.append(
-        t(s, d, "documents").select(col("doc_id"), col("text"), col("n_chars")),
-        base, "docs", version = 1, ts = Instant.parse("2024-01-15T00:00:00Z"))
+      val base = graft.Assets.dir("dataset_roundtrip", d) { b =>
+        DatasetConvention.append(
+          t(s, d, "documents").select(col("doc_id"), col("text"), col("n_chars")),
+          b, "docs", version = 1, ts = Instant.parse("2024-01-15T00:00:00Z"))
+      }
       // declared schema: no JSON inference pass (the corpus-scale
       // posture), and an empty shard reads back as a well-typed empty
       // frame instead of an unresolved-column failure
@@ -374,16 +376,18 @@ object Sources {
     // [[DatasetConvention.readVersions]] — per-version schema inference,
     // name-aligned union, v1 rows carrying NULL for the columns their
     // schema predates. The oracle reproduces exactly that null pattern.
+    // Both writes are one memoized asset; the query is the read.
     "q_dataset_versions" -> ((s, d) => {
-      val base = graft.Assets.tempDir("graft-dsv")
-      val docs = t(s, d, "documents")
-      DatasetConvention.append(
-        docs.filter(col("n_chars") % 2 === 0).select(col("doc_id"), col("text")),
-        base, "docs", version = 1, ts = Instant.parse("2024-01-15T00:00:00Z"))
-      DatasetConvention.append(
-        docs.filter(col("n_chars") % 2 =!= 0)
-          .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
-        base, "docs", version = 2, ts = Instant.parse("2024-02-20T00:00:00Z"))
+      val base = graft.Assets.dir("dataset_versions", d) { b =>
+        val docs = t(s, d, "documents")
+        DatasetConvention.append(
+          docs.filter(col("n_chars") % 2 === 0).select(col("doc_id"), col("text")),
+          b, "docs", version = 1, ts = Instant.parse("2024-01-15T00:00:00Z"))
+        DatasetConvention.append(
+          docs.filter(col("n_chars") % 2 =!= 0)
+            .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
+          b, "docs", version = 2, ts = Instant.parse("2024-02-20T00:00:00Z"))
+      }
       // the union schema, declared: v1 rows read NULL for the columns
       // their schema predates (same values as per-version inference +
       // unionByName), and an empty dataset degrades schema-total

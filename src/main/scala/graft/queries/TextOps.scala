@@ -237,9 +237,8 @@ object TextOps {
     * training. */
   private[graft] def docPerplexity(s: SparkSession, d: String): DataFrame =
     Tables.parquet(s, graft.Assets.dir("bigram_ppl", d) { out =>
-      val scored = computeDocPerplexity(graft.Tables.load(s, d, "documents"))
-      try scored.write.mode("overwrite").parquet(out)
-      finally scored.unpersist(blocking = false)
+      computeDocPerplexity(graft.Tables.load(s, d, "documents"))
+        .write.mode("overwrite").parquet(out)
     })
 
   /** One full train+score build (the path [[docPerplexity]] amortizes). */
@@ -251,28 +250,17 @@ object TextOps {
         "transform(sequence(1, size(w) - 1), i -> " +
           "struct(element_at(w, i) as w1, element_at(w, i+1) as w2))")).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist(StorageLevel.DISK_ONLY) // feeds LM training AND scoring
     val cnt = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
     val fst = cnt.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
     val lm = cnt.join(fst, "w1")
       .select(col("w1"), col("w2"),
         (col("c").cast("double") / col("c1").cast("double")).as("prob"))
-    // Materialize the (doc-sized, narrow) score table EAGERLY so the
-    // corpus-sized bigram cache can be released here instead of leaking
-    // one bigram-table cache per invocation for the session lifetime —
-    // the same discipline as Dedup.candidateEdges. The returned frame is
-    // persisted; callers may unpersist once downstream state no longer
-    // reads it (its footprint is one narrow row per document).
-    val scored = bg.join(lm, Seq("w1", "w2"))
+    bg.join(lm, Seq("w1", "w2"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(log(col("prob")).cast("decimal(28,12)")).cast("double").as("logprob"))
       .select(col("doc_id"), col("n_bigrams"), col("logprob"),
         exp(-col("logprob") / col("n_bigrams").cast("double")).as("ppl"))
-      .persist(StorageLevel.DISK_ONLY)
-    scored.count()
-    bg.unpersist(blocking = false)
-    scored
   }
 
   /** (c, r): every vocabulary word's corpus count with its GLOBAL

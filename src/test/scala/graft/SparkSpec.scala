@@ -9,8 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSession {
   lazy val spark: SparkSession = Session.local(4,
     "spark.app.name" -> "graft-test",
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft-wh").toString,
+    "spark.sql.warehouse.dir" -> Assets.tempDir("graft-wh"),
     // raw local FS (no .crc sidecars): the dataset convention's padded file
     // names contain ':' which Hadoop's ChecksumFileSystem cannot sidecar;
     // object stores (the production target) have no checksum wrapper.
@@ -20,8 +19,8 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = "/root/testdata/sf0.001"
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A scratch dir, deleted by the [[Assets]] sweep when the test JVM exits. */
+  def tmpDir(prefix: String): String = Assets.tempDir(prefix)
 
   /** Spark jobs started while `body` runs. */
   def jobsDuring[T](body: => T): (T, Int) = {

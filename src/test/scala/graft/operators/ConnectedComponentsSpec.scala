@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
@@ -106,8 +107,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     added.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
   }
 
-  test("local mode stores the input and the loop's edge list DISK_ONLY") {
-    // both are edge-list sized; only the per-round labels may use the heap
+  /** `body`'s result and the storage level of every persisted RDD its
+    * stages read or wrote; the RDDs it left persisted are released. */
+  private def storedDuring[T](body: => T): (T, Seq[StorageLevel]) = {
     val levels = new java.util.concurrent.ConcurrentHashMap[Int, StorageLevel]
     val l = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
@@ -115,21 +117,40 @@ class ConnectedComponentsSpec extends SparkSpec {
           .foreach(r => levels.put(r.id, r.storageLevel))
     }
     val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
-    val edges = (0L until 60L).map(i => (i, i + 1))
     TestBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    val got = try {
-      val out = Graph.connectedComponents(edges.toDF("src", "dst"))
-        .as[(Long, Long)].collect().toMap
+    val out = try {
+      val r = body
       TestBus.drain(spark.sparkContext)
-      out
+      r
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(got == reference(edges))
-    val seen = levels.asScala
-    assert(seen.values.count(_ == StorageLevel.DISK_ONLY) == 2, seen)
-    assert(seen.values.forall(Set(StorageLevel.DISK_ONLY, StorageLevel.MEMORY_AND_DISK)), seen)
     (spark.sparkContext.getPersistentRDDs.keySet -- rdds0)
       .foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+    (out, levels.asScala.values.toSeq)
+  }
+
+  test("local mode stores the input and the loop's edge list DISK_ONLY") {
+    // both are edge-list sized; only the per-round labels may use the heap
+    val edges = (0L until 60L).map(i => (i, i + 1))
+    val (got, seen) = storedDuring(Graph.connectedComponents(edges.toDF("src", "dst"))
+      .as[(Long, Long)].collect().toMap)
+    assert(got == reference(edges))
+    assert(seen.count(_ == StorageLevel.DISK_ONLY) == 2, seen)
+    assert(seen.forall(Set(StorageLevel.DISK_ONLY, StorageLevel.MEMORY_AND_DISK)), seen)
+  }
+
+  test("a dedup_components-style call stores the candidate edges once") {
+    // candidateEdges is a lazy plan, so the loop's input store is the only
+    // copy of the candidate edges (the other DISK_ONLY store is the loop's
+    // bidirectional edge list)
+    val sig = (0L until 200L).map(i => (i, if (i < 120) "dup" else s"u$i"))
+      .toDF("doc_id", "seed")
+      .select(col("doc_id") +: (0 until 8).map(o => concat(col("seed"), lit(s"_$o")).as(s"m$o")): _*)
+    val (got, seen) = storedDuring(Graph.connectedComponents(
+        graft.queries.Dedup.candidateEdges(sig, bucketCap = 64))
+      .as[(Long, Long)].collect().toMap)
+    assert(got == (0L until 120L).map(_ -> 0L).toMap)
+    assert(seen.count(_ == StorageLevel.DISK_ONLY) == 2, seen)
   }
 
   test("empty edge list yields empty labels") {

@@ -154,6 +154,22 @@ class DedupSpec extends SparkSpec {
     assert(capped == truth)
   }
 
+  test("candidateEdges is a lazy plan: building stores nothing, the loop's final round is the only residue") {
+    spark.sharedState.cacheManager.clearCache()
+    val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+    val (edges, jobs) = jobsDuring(Dedup.candidateEdges(degenerateSig(300, 20), bucketCap = 64))
+    assert(jobs == 0)
+    assert(edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds0)
+    val labels = graft.operators.Graph.connectedComponents(edges)
+      .as[(Long, Long)].collect()
+    assert(labels.length == 300 && labels.forall(_._2 == 0L))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- rdds0
+    assert(added.size == 1, added.mkString(", "))
+    added.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("q_dedup_canonical keeps the largest doc per component (tie: lowest id), one per cluster") {
     val resolve = graft.SparkEntry.queries("q_dedup_resolve")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
