@@ -187,8 +187,7 @@ object Num {
     s"(${sqlDsum(e)} / CAST(COUNT(*) AS DOUBLE))"
 
   /** Monotone range-bucket of a NON-NEGATIVE numeric column, for the
-    * two-pass distributed rank idiom (q_seq_pack / q_stratified_split):
-    * the pair (#integer digits, first two integer digits) encoded as one
+    * buckets of a [[graft.operators.Prefix]] scan: the pair (#integer digits, first two integer digits) encoded as one
     * string, so lexicographic bucket order equals numeric order — the
     * bucket is a PREFIX of any sort key that starts with the column, and
     * bucket-major traversal equals the global sort order. Unlike

@@ -25,8 +25,8 @@ object Verify {
       // Between-query cache hygiene (the Bench settle() discipline,
       // round-12 advice): queries that persist intermediates consumed by
       // the returned plan cannot unpersist them before this write
-      // materializes, so the harness frees them here — a 277-query dump
-      // otherwise accumulates every query's leftover blocks.
+      // materializes, so the harness frees them here — a full-registry
+      // dump otherwise accumulates every query's leftover blocks.
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -78,7 +78,7 @@ object Multimodal {
       try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
       catch { case scala.util.control.NonFatal(_) => None }
 
-  private[multimodal] def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
+  private[graft] def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray

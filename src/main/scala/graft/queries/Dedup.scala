@@ -422,6 +422,32 @@ object Dedup {
         coalesce(col("comp"), col("doc_id")).as("component"))
   }
 
+  /** A fresh md5-hex function (UTF-8 input, lowercase hex); one per
+    * partition, since a `MessageDigest` is not thread-safe. */
+  private def md5Hex(): String => String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    x => md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** The media fixtures' 8×8 {32, 224} grayscale PNG: cell i is high when
+    * hex digit i of `digits` is ≥ 8, flipped when i is in `flips`; cell 0
+    * is forced high and cell 63 low, so the aHash stays in [0, 2^63). */
+  private def gridPng(digits: String, flips: Set[Int]): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(8, 8,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var i = 0
+    while (i < 64) {
+      val high =
+        if (i == 0) true
+        else if (i == 63) false
+        else (Character.digit(digits.charAt(i), 16) >= 8) ^ flips.contains(i)
+      val v = if (high) 224 else 32
+      img.setRGB(i % 8, i / 8, (v << 16) | (v << 8) | v)
+      i += 1
+    }
+    graft.multimodal.Multimodal.encodePng(img)
+  }
+
   val queries: Map[String, QFn] = Map(
     // CANONICAL-document selection — the keep rule real pipelines run
     // instead of min-id: inside each near-dup cluster keep the LARGEST
@@ -1065,29 +1091,12 @@ object Dedup {
       val ids = tf(s, d, "documents").select(col("doc_id")).as[Long]
       val media = ids.mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(x: String): String =
-          md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val hex = md5Hex()
         it.map { id =>
           val digits = hex(s"img:${id / 8}:0") + hex(s"img:${id / 8}:1")
           val p = 1 + ((id * 7) % 62).toInt
           val q = 1 + ((id * 13) % 62).toInt
-          val img = new java.awt.image.BufferedImage(8, 8,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var i = 0
-          while (i < 64) {
-            val high0 = Character.digit(digits.charAt(i), 16) >= 8
-            val high =
-              if (i == 0) true
-              else if (i == 63) false
-              else high0 ^ (i == p || i == q)
-            val v = if (high) 224 else 32
-            img.setRGB(i % 8, i / 8, (v << 16) | (v << 8) | v)
-            i += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          graft.multimodal.Multimodal.Media(id, "image", bos.toByteArray,
+          graft.multimodal.Multimodal.Media(id, "image", gridPng(digits, Set(p, q)),
             graft.multimodal.Multimodal.MediaMeta(Some(8), Some(8), None))
         }
       }
@@ -1124,9 +1133,7 @@ object Dedup {
       // fanned scan (r14): the map side below is a real codec round-trip
       val ids = tf(s, d, "documents").select(col("doc_id")).as[Long]
       val media = ids.mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(x: String): String =
-          md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val hex = md5Hex()
         it.map { id =>
           val digits = hex(s"aud:${id / 8}:0") + hex(s"aud:${id / 8}:1") +
             hex(s"aud:${id / 8}:2")
@@ -1197,29 +1204,11 @@ object Dedup {
       val ids = tf(s, d, "documents").select(col("doc_id")).as[Long]
       val media = ids.mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(x: String): String =
-          md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val hex = md5Hex()
         it.map { id =>
           val frames = (0 until 4).map { f =>
             val digits = hex(s"vid:${id / 8}:$f:0") + hex(s"vid:${id / 8}:$f:1")
-            val p = 1 + ((id * 7 + f * 11) % 62).toInt
-            val img = new java.awt.image.BufferedImage(8, 8,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var i = 0
-            while (i < 64) {
-              val high0 = Character.digit(digits.charAt(i), 16) >= 8
-              val high =
-                if (i == 0) true
-                else if (i == 63) false
-                else high0 ^ (i == p)
-              val v = if (high) 224 else 32
-              img.setRGB(i % 8, i / 8, (v << 16) | (v << 8) | v)
-              i += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            bos.toByteArray
+            gridPng(digits, Set(1 + ((id * 7 + f * 11) % 62).toInt))
           }
           graft.multimodal.Multimodal.Media(id, "video",
             graft.multimodal.Multimodal.encodeVideo(frames),
@@ -1252,29 +1241,12 @@ object Dedup {
       val ids = tf(s, d, "documents").select(col("doc_id")).as[Long]
       val media = ids.mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(x: String): String =
-          md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val hex = md5Hex()
         it.map { id =>
           val sceneLen = 1 + (id % 3).toInt
           val frames = (0 until 6).map { f =>
             val sc = f / sceneLen
-            val digits = hex(s"scn:$id:$sc:0") + hex(s"scn:$id:$sc:1")
-            val img = new java.awt.image.BufferedImage(8, 8,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var i = 0
-            while (i < 64) {
-              val high =
-                if (i == 0) true
-                else if (i == 63) false
-                else Character.digit(digits.charAt(i), 16) >= 8
-              val v = if (high) 224 else 32
-              img.setRGB(i % 8, i / 8, (v << 16) | (v << 8) | v)
-              i += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            bos.toByteArray
+            gridPng(hex(s"scn:$id:$sc:0") + hex(s"scn:$id:$sc:1"), Set.empty)
           }
           graft.multimodal.Multimodal.Media(id, "video",
             graft.multimodal.Multimodal.encodeVideo(frames),
@@ -1315,29 +1287,13 @@ object Dedup {
       val ids = tf(s, d, "documents").select(col("doc_id")).as[Long]
       val media = ids.mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(x: String): String =
-          md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val hex = md5Hex()
         it.map { id =>
           val shift = (id % 3).toInt
           val frames = (0 until 6).map { f =>
             val tpos = f + shift
-            val digits = hex(s"off:${id / 8}:$tpos:0") + hex(s"off:${id / 8}:$tpos:1")
-            val img = new java.awt.image.BufferedImage(8, 8,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var i = 0
-            while (i < 64) {
-              val high =
-                if (i == 0) true
-                else if (i == 63) false
-                else Character.digit(digits.charAt(i), 16) >= 8
-              val v = if (high) 224 else 32
-              img.setRGB(i % 8, i / 8, (v << 16) | (v << 8) | v)
-              i += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(img, "png", bos)
-            bos.toByteArray
+            gridPng(hex(s"off:${id / 8}:$tpos:0") + hex(s"off:${id / 8}:$tpos:1"),
+              Set.empty)
           }
           graft.multimodal.Multimodal.Media(id, "video",
             graft.multimodal.Multimodal.encodeVideo(frames),

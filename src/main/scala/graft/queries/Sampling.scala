@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Prefix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -103,12 +104,10 @@ object Sampling {
     // and the keep cut is an integer rank rule (4·rnk ≤ n) over the
     // DECIMAL weight — no float ordering anywhere. Scale shape: one
     // feature explode (map-side combined into a 1024-row bucket model,
-    // broadcast back), one doc-keyed weight aggregate, and the
-    // q_seq_pack two-level prefix rank (coarse ⌊−w⌋ bin window +
-    // broadcast bin prefix) — the corpus never sees a one-partition
-    // window or a wide shuffle.
+    // broadcast back), one doc-keyed weight aggregate, and a
+    // [[graft.operators.Prefix]] rank over coarse ⌊−w⌋ bins — the corpus
+    // never sees a one-partition window or a wide shuffle.
     "q_dsir" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val B = 1024
       val docs = Tables.loadFan(s, d, "documents") // token+bigram explode (r14)
         .select(col("doc_id"), col("lang"),
@@ -144,19 +143,12 @@ object Sampling {
         .agg(count(lit(1)).as("n_feats"), sum(col("term")).as("wsum"))
         .withColumn("negw", -col("wsum"))
         .withColumn("fl", floor(col("negw")).cast("long"))
+        // Prefix reads the weights twice; lazy, each read re-runs the
+        // feature join and aggregate (measured slower at sf0.1), so persist
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wIn = Window.partitionBy(col("fl")).orderBy(col("negw"), col("doc_id"))
-      val bc = ws.groupBy(col("fl")).agg(count(lit(1)).as("btot"))
-      val wB = Window.orderBy(col("fl"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = bc
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("fl"), col("bprev"))
-      val n = ws.agg(count(lit(1)).as("n"))
-      ws.withColumn("lr", row_number().over(wIn).cast("long"))
-        .join(broadcast(bpre), "fl")
-        .crossJoin(broadcast(n))
-        .withColumn("rnk", col("bprev") + col("lr"))
+      Prefix(ws, within = Nil, buckets = Seq(Prefix.asc("fl")),
+          order = Seq(col("negw"), col("doc_id")),
+          measures = Seq(Prefix.Rank("rnk", total = Some("n"))), inclusive = true)
         .select(col("doc_id"), col("n_feats"),
           col("wsum").cast("double").as("w"), col("rnk"),
           (col("rnk") * 4 <= col("n")).as("keep"))
@@ -423,38 +415,20 @@ object Sampling {
     // hash luck, starving its dev set). Docs are ranked within their
     // stratum by md5(doc_id) (a deterministic shuffle, so the assignment
     // is backfill-stable like every split here) and cut at exact integer
-    // thresholds 10·(r−1) < 8·n / 9·n. The rank is computed with the
-    // repo's two-pass distributed prefix idiom (q_seq_pack): a row_number
-    // inside (stratum, hash-prefix bucket) partitions plus a broadcast of
-    // cumulative per-bucket counts — the bucket is a PREFIX of the sort
-    // key, so bucket-major order equals global hash order. At 100 TB no
-    // task ever sorts a whole stratum (a web corpus is half one language):
-    // each of the 256 buckets holds ~1/256 of the stratum, and the bucket
-    // width is one constant (widen the substring) when strata outgrow it.
+    // thresholds 10·(r−1) < 8·n / 9·n. The rank is a
+    // [[graft.operators.Prefix]] rank per stratum over 2-hex-char hash
+    // prefix buckets, so at 100 TB no task ever sorts a whole stratum (a
+    // web corpus is half one language): each of the 256 buckets holds
+    // ~1/256 of the stratum, and the bucket width is one constant (widen
+    // the substring) when strata outgrow it.
     "q_stratified_split" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("h", md5(encode(col("doc_id").cast("string"), "UTF-8")))
         .withColumn("hb", substring(col("h"), 1, 2))
-      val wIn = Window.partitionBy(col("lang"), col("hb"))
-        .orderBy(col("h"), col("doc_id"))
-      val local = docs.withColumn("lr", row_number().over(wIn).cast("long"))
-      val wB = Window.partitionBy(col("lang")).orderBy(col("hb"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      // model-sized (≤ 256·|strata| rows) and feeding two consumers, so
-      // persist instead of rescanning the corpus per branch (the
-      // q_resample cached-aggregate idiom; narrow residue is deliberate)
-      val bcounts = docs.groupBy(col("lang"), col("hb"))
-        .agg(count(lit(1)).as("btot"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bpre = bcounts
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("lang"), col("hb"), col("bprev"))
-      val nlang = bcounts.groupBy(col("lang")).agg(sum(col("btot")).as("n"))
-      local.join(broadcast(bpre), Seq("lang", "hb"))
-        .join(broadcast(nlang), Seq("lang"))
-        .withColumn("r", col("bprev") + col("lr"))
+      Prefix(docs, within = Seq("lang"), buckets = Seq(Prefix.asc("hb")),
+          order = Seq(col("h"), col("doc_id")),
+          measures = Seq(Prefix.Rank("r", total = Some("n"))), inclusive = true)
         .withColumn("split",
           when((col("r") - 1) * 10 < col("n") * 8, "train")
             .when((col("r") - 1) * 10 < col("n") * 9, "dev")
@@ -469,34 +443,21 @@ object Sampling {
     // reproducible run-to-run (resume a crashed epoch mid-stream, audit
     // which docs a checkpoint saw) and cheap to re-derive because it is a
     // pure function of (seed, doc_id). Order key = md5("epoch7:" || id);
-    // the global position comes from the same bucket-prefix two-pass rank
-    // as q_stratified_split (the first two hex chars ARE a prefix of the
-    // sort key, so bucket-major order equals global hash order — no task
-    // sorts the corpus), and the contiguous shard id (8 loader shards,
-    // balanced to the row) is integer arithmetic on the position. At
-    // 100 TB the only non-map work is one 256-row bucket aggregate and
-    // the per-bucket local sorts.
+    // the global position is a [[graft.operators.Prefix]] rank over
+    // 2-hex-char hash prefix buckets (no task sorts the corpus), and the
+    // contiguous shard id (8 loader shards, balanced to the row) is
+    // integer arithmetic on the position. At 100 TB the only non-map work
+    // is one 256-row bucket aggregate and the per-bucket local sorts.
     "q_epoch_shuffle" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"))
         .withColumn("h", md5(encode(
           concat(lit("epoch7:"), col("doc_id").cast("string")), "UTF-8")))
         .withColumn("hb", substring(col("h"), 1, 2))
-      val wIn = Window.partitionBy(col("hb")).orderBy(col("h"), col("doc_id"))
-      val local = docs.withColumn("lr", row_number().over(wIn).cast("long"))
-      // tiny bucket aggregate (≤ 256 rows), two consumers → persist
-      val bcounts = docs.groupBy(col("hb")).agg(count(lit(1)).as("btot"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wB = Window.orderBy(col("hb"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = bcounts
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("hb"), col("bprev"))
-      val ntotal = bcounts.agg(sum(col("btot")).as("n"))
-      local.join(broadcast(bpre), Seq("hb"))
-        .withColumn("epoch_pos", col("bprev") + col("lr") - 1)
-        .crossJoin(broadcast(ntotal))
+      Prefix(docs, within = Nil, buckets = Seq(Prefix.asc("hb")),
+          order = Seq(col("h"), col("doc_id")),
+          measures = Seq(Prefix.Rank("epoch_pos", total = Some("n"))),
+          inclusive = false)
         .withColumn("shard", expr("(epoch_pos * 8) div n"))
         .select(col("doc_id"), col("epoch_pos"), col("shard"))
         .orderBy(col("doc_id"))
@@ -508,13 +469,11 @@ object Sampling {
     // shuffle deterministically WITHIN each band (seeded md5 permutation,
     // the q_epoch_shuffle primitive) so bands stream in random order while
     // the band sequence stays monotone. `pos` is the global 1-based
-    // position via the same bucket-prefix two-pass rank as
-    // q_stratified_split: (band, hash-prefix) buckets are a PREFIX of the
-    // global sort key (band, h, doc_id), so bucket-major order IS global
-    // order — the only non-map work is a ≤ 4×256-row bucket aggregate and
-    // per-bucket local sorts. No task ever sorts the corpus.
+    // position, a [[graft.operators.Prefix]] rank over (band, hash-prefix)
+    // buckets of the sort key (band, h, doc_id) — the only non-map work is
+    // a ≤ 4×256-row bucket aggregate and per-bucket local sorts. No task
+    // ever sorts the corpus.
     "q_curriculum" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val words = size(split(trim(col("text")), "\\s+")).cast("double")
       val punct = length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", ""))
         .cast("double")
@@ -533,21 +492,10 @@ object Sampling {
         .withColumn("h", md5(encode(
           concat(lit("curr:"), col("doc_id").cast("string")), "UTF-8")))
         .withColumn("hb", substring(col("h"), 1, 2))
-      val wIn = Window.partitionBy(col("band"), col("hb"))
-        .orderBy(col("h"), col("doc_id"))
-      val local = docs.withColumn("lr", row_number().over(wIn).cast("long"))
-      // tiny bucket aggregate (≤ 4×256 rows), reused by the prefix sum
-      val bcounts = docs.groupBy(col("band"), col("hb"))
-        .agg(count(lit(1)).as("btot"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wB = Window.orderBy(col("band"), col("hb"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = bcounts
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("band"), col("hb"), col("bprev"))
-      local.join(broadcast(bpre), Seq("band", "hb"))
-        .select(col("doc_id"), col("band"),
-          (col("bprev") + col("lr")).as("pos"))
+      Prefix(docs, within = Nil, buckets = Seq(Prefix.asc("band"), Prefix.asc("hb")),
+          order = Seq(col("h"), col("doc_id")),
+          measures = Seq(Prefix.Rank("pos")), inclusive = true)
+        .select(col("doc_id"), col("band"), col("pos"))
         .orderBy(col("pos"))
     }),
 
@@ -734,13 +682,12 @@ object Sampling {
     // exact quota (integer floor division, so quotas are reproducible)
     // and greedily fill it in deterministic hash-priority order —
     // every doc whose source-local running total stays within quota is
-    // picked. The running total is the q_seq_pack bucket-prefix prefix
-    // sum (hash bucket inside source + broadcast cross-bucket offsets),
-    // so no task ever sorts a whole source; quotas and weights live in
-    // source-cardinality-sized broadcast frames. Output: the per-source
-    // audit (quota, docs picked, chars picked).
+    // picked. The running total is a [[graft.operators.Prefix]] sum over
+    // hash-prefix buckets inside each source, so no task ever sorts a
+    // whole source; quotas and weights live in source-cardinality-sized
+    // broadcast frames. Output: the per-source audit (quota, docs picked,
+    // chars picked).
     "q_token_budget_mix" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
         // 2-arg substr (no length cap) — the exact spelling the oracle
@@ -749,26 +696,15 @@ object Sampling {
           (expr("CAST(substr(source, 4) AS BIGINT)") % 3L) + 1L)
         .withColumn("h", md5(encode(col("doc_id").cast("string"), "UTF-8")))
         .withColumn("hb", substring(col("h"), 1, 2))
-      val wIn = Window.partitionBy(col("source"), col("hb"))
-        .orderBy(col("h"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = docs.withColumn("lc", sum(col("n_chars")).over(wIn))
-      val bsum = docs.groupBy(col("source"), col("hb"))
-        .agg(sum(col("n_chars")).as("btot"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wB = Window.partitionBy(col("source")).orderBy(col("hb"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = bsum
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("source"), col("hb"), col("bprev"))
       val srcW = docs.groupBy(col("source")).agg(max(col("w")).as("w"))
       val totals = docs.agg((sum(col("n_chars")) * 2L).as("b5"))
         .crossJoin(srcW.agg(sum(col("w")).as("sumw")))
       val quota = srcW.crossJoin(broadcast(totals))
         .select(col("source"),
           expr("(b5 div 5) * w div sumw").as("quota_chars"))
-      val picked = local.join(broadcast(bpre), Seq("source", "hb"))
-        .withColumn("cum", col("bprev") + col("lc"))
+      val picked = Prefix(docs, within = Seq("source"),
+          buckets = Seq(Prefix.asc("hb")), order = Seq(col("h"), col("doc_id")),
+          measures = Seq(Prefix.Sum("cum", col("n_chars"))), inclusive = true)
         .join(broadcast(quota), Seq("source"))
         .filter(col("cum") <= col("quota_chars"))
         .groupBy(col("source"))
@@ -958,8 +894,8 @@ object Sampling {
          |FROM r WHERE rnk <= $CapK ORDER BY lang, rnk""".stripMargin,
 
     // Oracle states the SPEC (rank within stratum by md5, exact integer
-    // cuts); the Spark side implements the same function with the
-    // distributed two-pass rank — identical assignment, different plan.
+    // cuts); the Spark side implements the same function with
+    // graft.operators.Prefix — identical assignment, different plan.
     "q_stratified_split" ->
       """WITH r AS (SELECT lang, n_chars,
         |  ROW_NUMBER() OVER (PARTITION BY lang
@@ -974,8 +910,8 @@ object Sampling {
         |FROM r GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
 
     // the oracle states the spec (global row_number over the seeded md5
-    // order); the Spark side computes the same permutation with the
-    // bucket-prefix distributed rank
+    // order); the Spark side computes the same permutation with
+    // graft.operators.Prefix
     "q_epoch_shuffle" ->
       """WITH r AS (SELECT doc_id,
         |  ROW_NUMBER() OVER (
@@ -987,8 +923,8 @@ object Sampling {
         |  CAST((epoch_pos * 8) // n AS BIGINT) AS shard
         |FROM r ORDER BY doc_id""".stripMargin,
 
-    // the oracle's single global window states the spec the bucket-prefix
-    // two-pass rank implements (same pattern as q_epoch_shuffle)
+    // the oracle's single global window states the spec
+    // graft.operators.Prefix implements (same pattern as q_epoch_shuffle)
     "q_curriculum" ->
       """WITH f AS (SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS words,

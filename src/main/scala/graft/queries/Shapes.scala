@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Num, Tables}
+import graft.operators.Prefix
 
 /** Wide multi-join TPC-H query shapes beyond Q1/Q3/Q5/Q18/Q21.
   *
@@ -1295,41 +1296,24 @@ object Shapes {
 
     // Pareto 80/20 — the smallest customer set covering 80% of revenue:
     // rank customers by revenue descending, running decimal-exact share,
-    // count ranks needed to cross 0.8. The running sum is DISTRIBUTED
-    // (q_seq_pack idiom, descending flavor): customers bucket by
-    // [[Num.rangeBucket]] of revenue (monotone → bucket-major DESC =
-    // global revenue-desc order), the intra-bucket running decimal sum
-    // is a bucket-partitioned window, and each bucket's offset is the
-    // broadcast exclusive prefix of per-bucket sums over buckets of
-    // LARGER revenue — only the tiny bucket table crosses a
-    // one-partition window, so no task sorts the customer dimension.
-    // Decimal addition is exact/associative, so the two-level sum equals
-    // the single-window sum bit for bit. Output is one row: population,
+    // count ranks needed to cross 0.8. The running sum and the total are
+    // an inclusive [[graft.operators.Prefix]] sum over DESCENDING
+    // [[Num.rangeBucket]] buckets of revenue, so no task sorts the
+    // customer dimension. Decimal addition is exact/associative, so the
+    // two-level sum equals the single-window sum bit for bit. Output is
+    // one row: population,
     // heavy-set size, and the heavy fraction — the "how concentrated is
     // my business" scalar next to q_gini's full-curve integral.
     "q_pareto_8020" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dec = org.apache.spark.sql.types.DecimalType(38, 6)
-      // dimension-sized, two consumers (running sums + bucket sums + total)
       val rev = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(Num.dsum(col("o_totalprice")).as("x"))
         .withColumn("rb", Num.rangeBucket(col("x")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wIn = Window.partitionBy(col("rb"))
-        .orderBy(col("x").desc, col("o_custkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wB = Window.orderBy(col("rb").desc)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = rev.groupBy(col("rb")).agg(sum(col("x").cast(dec)).as("bsum"))
-        .withColumn("bprev",
-          coalesce(sum(col("bsum")).over(wB), lit(0).cast(dec)))
-        .select(col("rb"), col("bprev"))
-      val tot = rev.agg(Num.dsum(col("x")).as("tx"))
-      rev.withColumn("lcum", sum(col("x").cast(dec)).over(wIn))
-        .join(broadcast(bpre), "rb")
-        .crossJoin(broadcast(tot))
-        .select(((col("bprev") + col("lcum")).cast("double") /
-          col("tx")).as("cum_share"))
+      Prefix(rev, within = Nil, buckets = Seq(Prefix.desc("rb")),
+          order = Seq(col("x").desc, col("o_custkey")),
+          measures = Seq(Prefix.Sum("cum", col("x").cast(dec), total = Some("tx"))),
+          inclusive = true)
+        .select((col("cum").cast("double") / col("tx").cast("double")).as("cum_share"))
         .agg(count(lit(1)).as("n_customers"),
           sum(when(col("cum_share") < 0.8, 1L).otherwise(0L)).as("below"))
         .select(col("n_customers"),
@@ -1537,7 +1521,7 @@ object Shapes {
     // a per-bucket last/first window over the control∪treated union
     // (tag-ordered so equality counts as BELOW only), and cross-bucket
     // misses fall back to broadcast prefix-max / suffix-min carries over
-    // the tiny bucket frame — the q_gini discipline pointed at a join
+    // the tiny bucket frame — the Prefix bucket layout pointed at a join
     // instead of a rank, so no task ever sorts the whole axis. Ties
     // below-vs-above resolve to below (documented, oracle-mirrored).
     "q_match_att" -> ((s, d) => {
@@ -1731,36 +1715,18 @@ object Shapes {
     // its own group is strictly smaller (gmin < sz kills it). Equal
     // (price, size) pairs are mutually non-dominating and both survive,
     // matching the oracle's strict-dominance NOT EXISTS. The prefix-min
-    // is DISTRIBUTED (q_seq_pack idiom, min flavor): price groups bucket
-    // by [[Num.rangeBucket]] of price (monotone → bucket-major = price
-    // order), the intra-bucket exclusive prefix-min is a
-    // bucket-partitioned window, and each bucket inherits the broadcast
-    // prefix-min of all strictly-earlier buckets' minima — min is
-    // associative so least(bprev_min, local_min) equals the global
-    // exclusive prefix-min, and only the tiny bucket table crosses a
-    // one-partition window; no task ever sorts the whole price
-    // dimension. least() skips nulls, and both-null (the very first
-    // group) stays null exactly like the empty window frame did.
+    // is an exclusive [[graft.operators.Prefix]] min over
+    // [[Num.rangeBucket]] buckets of price, so no task ever sorts the
+    // whole price dimension; the very first group's is NULL.
     "q_skyline" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val p = t(s, d, "part").select(col("p_partkey"),
         col("p_retailprice").as("price"), col("p_size").cast("long").as("sz"))
-      // price-group table, two consumers (local prefix + bucket minima)
       val byPrice = p.groupBy(col("price").as("gp"))
         .agg(min(col("sz")).as("gmin"))
         .withColumn("rb", Num.rangeBucket(col("gp")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wIn = Window.partitionBy(col("rb")).orderBy(col("gp"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wB = Window.orderBy(col("rb"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = byPrice.groupBy(col("rb")).agg(min(col("gmin")).as("bmin"))
-        .withColumn("bprev_min", min(col("bmin")).over(wB))
-        .select(col("rb"), col("bprev_min"))
-      val strict = byPrice
-        .withColumn("local_min", min(col("gmin")).over(wIn))
-        .join(broadcast(bpre), "rb")
-        .withColumn("min_strict", least(col("local_min"), col("bprev_min")))
+      val strict = Prefix(byPrice, within = Nil, buckets = Seq(Prefix.asc("rb")),
+        order = Seq(col("gp")), measures = Seq(Prefix.Min("min_strict", col("gmin"))),
+        inclusive = false)
       p.join(strict, col("price") === col("gp"))
         .filter(!(coalesce(col("min_strict") <= col("sz"), lit(false)) ||
           col("gmin") < col("sz")))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Num, Tables}
 import graft.io.DatasetConvention
+import graft.operators.Prefix
 import graft.tables.TableOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -988,19 +989,18 @@ object Sources {
     // extendedprice distributions of returned ('R') and accepted ('A')
     // lineitems. PSI needs a bin design and misses drift inside a bin;
     // KS compares the FULL empirical CDFs, at the price of an ordered
-    // pass. That pass is the q_gini distributed-ECDF discipline: group
-    // by value (map-side combined — the ECDF only moves at distinct
-    // values), rangeBucket the value axis, cumulate inside buckets in
-    // parallel, and carry cross-bucket offsets as a broadcast exclusive
-    // prefix of the tiny per-bucket count table — no task ever sorts the
-    // full value column. The statistic stays INTEGER until the exit:
+    // pass: group by value (map-side combined — the ECDF only moves at
+    // distinct values), then both CDFs and their totals are inclusive
+    // [[graft.operators.Prefix]] sums over rangeBucket(value) buckets —
+    // no task ever sorts the full value column (an ECDF is
+    // right-continuous, so the step at x includes x). The statistic
+    // stays INTEGER until the exit:
     // D·nA·nR = max|cumA·nR − cumR·nA| in DECIMAL(19,0) products (past
     // 2^53 at 100 TB), one double division at the end, and the 95%
     // rejection verdict from the asymptotic critical value
     // c(.05)=1.358 — every input to that compare is bit-identical
     // IEEE arithmetic in both engines (sqrt is correctly rounded).
     "q_ks_test" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
       val g = t(s, d, "lineitem")
         .filter(col("l_returnflag").isin("A", "R"))
@@ -1008,26 +1008,12 @@ object Sources {
         .agg(sum(when(col("l_returnflag") === "A", 1L).otherwise(0L)).as("a_n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r_n"))
         .withColumn("rb", Num.rangeBucket(col("v")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wB = Window.orderBy(col("rb")).rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = g.groupBy(col("rb"))
-        .agg(sum(col("a_n")).as("ba"), sum(col("r_n")).as("br"))
-        .withColumn("aprev", coalesce(sum(col("ba")).over(wB), lit(0L)))
-        .withColumn("rprev", coalesce(sum(col("br")).over(wB), lit(0L)))
-        .select(col("rb"), col("aprev"), col("rprev"))
-      // ECDF is right-continuous: the step at x includes x, so the
-      // in-bucket window runs to CURRENT ROW (vs the exclusive prefix
-      // q_auc uses for strictly-below counts).
-      val wIn = Window.partitionBy(col("rb")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = g.agg(sum(col("a_n")).as("na"), sum(col("r_n")).as("nr"))
-      g.withColumn("ca", sum(col("a_n")).over(wIn))
-        .withColumn("cr", sum(col("r_n")).over(wIn))
-        .join(broadcast(bpre), "rb")
-        .crossJoin(broadcast(tot))
+      Prefix(g, within = Nil, buckets = Seq(Prefix.asc("rb")), order = Seq(col("v")),
+          measures = Seq(Prefix.Sum("ca", col("a_n"), total = Some("na")),
+            Prefix.Sum("cr", col("r_n"), total = Some("nr"))), inclusive = true)
         .select(col("na"), col("nr"),
-          abs((col("aprev") + col("ca")).cast(d19) * col("nr").cast(d19) -
-            (col("rprev") + col("cr")).cast(d19) * col("na").cast(d19))
+          abs(col("ca").cast(d19) * col("nr").cast(d19) -
+            col("cr").cast(d19) * col("na").cast(d19))
             .as("diff"))
         .groupBy(col("na"), col("nr"))
         .agg(max(col("diff")).as("dmax"))
@@ -1042,37 +1028,23 @@ object Sources {
 
     // Gini concentration — how unequal is revenue across suppliers (the
     // Lorenz-curve scalar): G = Σ(2i−n−1)·x_i / (n·Σx) over ascending
-    // per-supplier revenue. The global rank is computed DISTRIBUTED with
-    // the two-pass prefix idiom (q_seq_pack / q_stratified_split):
-    // suppliers bucket by [[Num.rangeBucket]] of revenue (monotone, so
-    // bucket-major = global (x, suppkey) order — exact ties share a
-    // bucket), row_number runs inside each bucket in parallel, and the
-    // cross-bucket offsets arrive as a broadcast exclusive prefix of the
-    // bucket-count table — only THAT tiny table ever crosses a
-    // one-partition window, so no task sorts the whole supplier
-    // dimension at any scale. Both sums are exact decimals so G is
-    // order-independent, ties totalized by (revenue, suppkey).
+    // per-supplier revenue. The global rank is a [[graft.operators.Prefix]]
+    // rank over [[Num.rangeBucket]] buckets of revenue (exact ties share
+    // a bucket), so no task sorts the whole supplier dimension at any
+    // scale. Both sums are exact decimals so G is order-independent, ties
+    // totalized by (revenue, suppkey).
     "q_gini" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dec = org.apache.spark.sql.types.DecimalType(38, 6)
       val d18 = org.apache.spark.sql.types.DecimalType(18, 6)
-      // dimension-sized and feeding two consumers (local ranks + bucket
-      // counts) — persist so the lineitem aggregate runs once
       val rev = t(s, d, "lineitem").groupBy(col("l_suppkey"))
         .agg(Num.dsum(col("l_extendedprice")).as("x"))
         .withColumn("rb", Num.rangeBucket(col("x")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wIn = Window.partitionBy(col("rb")).orderBy(col("x"), col("l_suppkey"))
-      val wB = Window.orderBy(col("rb")).rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = rev.groupBy(col("rb")).agg(count(lit(1)).as("btot"))
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("rb"), col("bprev"))
       // x is a dsum output (≤6dp, exact in DECIMAL(18,6)); multiplying
       // the NARROW decimal by the integer rank keeps the product inside
       // DECIMAL(38,6) with no precision cap in either engine
-      rev.withColumn("lr", row_number().over(wIn).cast("long"))
-        .join(broadcast(bpre), "rb")
-        .select(col("x"), (col("bprev") + col("lr")).as("i"))
+      Prefix(rev, within = Nil, buckets = Seq(Prefix.asc("rb")),
+          order = Seq(col("x"), col("l_suppkey")),
+          measures = Seq(Prefix.Rank("i")), inclusive = true)
         .agg(count(lit(1)).as("n"),
           sum(col("x").cast(d18)).cast("double").as("sx"),
           sum((col("x").cast(d18) * (lit(2) * col("i"))).cast(dec))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Num, Tables}
+import graft.operators.Prefix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -264,45 +265,22 @@ object TextOps {
   }
 
   /** (c, r): every vocabulary word's corpus count with its GLOBAL
-    * frequency rank (1 = most frequent; ties by word), computed with the
-    * TWO-LEVEL distributed prefix decomposition (the q_stratified_split
-    * idiom with stratum = count): rank = (#types with larger count —
-    * exclusive prefix over the Heaps-tiny distinct-count histogram, the
-    * only one-partition window) + (#same-count types in smaller
-    * word-prefix buckets — per-count exclusive prefix over
-    * substring(w,1,2) buckets) + row_number inside the (count, prefix)
-    * bucket. The word prefix is a PREFIX of the tie-break key, so
+    * frequency rank (1 = most frequent; ties by word): a
+    * [[graft.operators.Prefix]] rank over (count desc, word-prefix)
+    * buckets. The word prefix is a PREFIX of the tie-break key, so
     * bucket-major order equals (c desc, w) exactly — and the hapax
     * stratum (half the vocabulary at c=1) fans out over ~1.3k prefix
     * buckets instead of one task's sort. Shared by q_zipf_fit and
     * q_vocab_coverage. */
   private def rankedVocab(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // vocabulary-sized, narrow, two consumers — persist
     val wc = t(s, d, "documents")
       .select(explode(regexp_extract_all(lower(col("text")),
         lit("[a-z]+|[0-9]+"), lit(0))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .withColumn("wb", substring(col("w"), 1, 2))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wIn = Window.partitionBy(col("c"), col("wb")).orderBy(col("w"))
-    // (count, word-prefix) bucket counts — vocabulary collapsed ~1000×
-    val bc = wc.groupBy(col("c"), col("wb")).agg(count(lit(1)).as("btot"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wWb = Window.partitionBy(col("c")).orderBy(col("wb"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bpre = bc
-      .withColumn("bprev", coalesce(sum(col("btot")).over(wWb), lit(0L)))
-      .select(col("c"), col("wb"), col("bprev"))
-    val wC = Window.orderBy(col("c").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val r0 = bc.groupBy(col("c")).agg(sum(col("btot")).as("k"))
-      .withColumn("r0", coalesce(sum(col("k")).over(wC), lit(0L)))
-      .select(col("c"), col("r0"))
-    wc.withColumn("lr", row_number().over(wIn).cast("long"))
-      .join(broadcast(bpre), Seq("c", "wb"))
-      .join(broadcast(r0), Seq("c"))
-      .select(col("c"), (col("r0") + col("bprev") + col("lr")).as("r"))
+    Prefix(wc, within = Nil, buckets = Seq(Prefix.desc("c"), Prefix.asc("wb")),
+        order = Seq(col("w")), measures = Seq(Prefix.Rank("r")), inclusive = true)
+      .select(col("c"), col("r"))
   }
 
   val queries: Map[String, QFn] = Map(
@@ -344,33 +322,20 @@ object TextOps {
     // cuts, not interpolated quantiles: rank by normalized log-prob
     // (nlp = −logprob/n_bigrams — a bit-identical double in both
     // engines, unlike exp(nlp) whose libm may differ in the last ulp)
-    // via the q_seq_pack two-level prefix decomposition — coarse-bin
-    // window inside (lang, ⌊4·nlp⌋) + broadcast bin-prefix — so no
-    // single-partition window ever sees a whole language; the bucket
-    // verdict is integer logic (3r ≤ n / 3r ≤ 2n). Docs under 2 words
-    // have no LM rows and take no bucket, as in q_lm_perplexity.
+    // via a [[graft.operators.Prefix]] rank per language over coarse
+    // ⌊4·nlp⌋ bins, so no single-partition window ever sees a whole
+    // language; the bucket verdict is integer logic (3r ≤ n / 3r ≤ 2n).
+    // Docs under 2 words have no LM rows and take no bucket, as in
+    // q_lm_perplexity.
     "q_ppl_buckets" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val scored = docPerplexity(s, d)
         .select(col("doc_id"), col("ppl"),
           (-col("logprob") / col("n_bigrams").cast("double")).as("nlp"))
         .join(t(s, d, "documents").select(col("doc_id"), col("lang")), "doc_id")
         .withColumn("fl", floor(col("nlp") * 4).cast("long"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val wIn = Window.partitionBy(col("lang"), col("fl"))
-        .orderBy(col("nlp"), col("doc_id"))
-      val bc = scored.groupBy(col("lang"), col("fl")).agg(count(lit(1)).as("btot"))
-      val wB = Window.partitionBy(col("lang")).orderBy(col("fl"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = bc
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("lang"), col("fl"), col("bprev"))
-      val n = scored.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-      scored
-        .withColumn("lr", row_number().over(wIn).cast("long"))
-        .join(broadcast(bpre), Seq("lang", "fl"))
-        .join(broadcast(n), "lang")
-        .withColumn("r", col("bprev") + col("lr"))
+      Prefix(scored, within = Seq("lang"), buckets = Seq(Prefix.asc("fl")),
+          order = Seq(col("nlp"), col("doc_id")),
+          measures = Seq(Prefix.Rank("r", total = Some("n"))), inclusive = true)
         .withColumn("bucket",
           when(col("r") * 3 <= col("n"), "head")
             .when(col("r") * 3 <= col("n") * 2, "middle")
@@ -461,30 +426,18 @@ object TextOps {
     // Sequence PACKING: concatenate the corpus in doc_id order and cut it
     // into fixed 512-token context windows — each doc's global token
     // offset decides which windows it spans (the LLM-training batch
-    // layout). The global prefix sum is computed DISTRIBUTED, not with a
-    // single-partition window: docs bucket by `doc_id div 1000` (range-
-    // aligned with the ordering key), the intra-bucket running sum is a
-    // bucket-partitioned window (parallel), and the cross-bucket offsets
-    // come from a bucket-count-sized exclusive prefix broadcast back — the
-    // canonical two-pass distributed scan; only the tiny bucket table ever
-    // passes through a one-partition window.
+    // layout). The global offset is an exclusive
+    // [[graft.operators.Prefix]] sum over `doc_id div 1000` buckets
+    // (range-aligned with the ordering key), not a single-partition
+    // window over the corpus.
     "q_seq_pack" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d, "documents")
         .select(col("doc_id"),
           size(split(trim(lower(col("text"))), "\\s+")).cast("long").as("n_tokens"))
         .withColumn("bucket", expr("doc_id div 1000"))
-      val wIn = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val inner = docs.withColumn("local_prev",
-        coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
-      val wB = Window.orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = docs.groupBy(col("bucket")).agg(sum(col("n_tokens")).as("btot"))
-        .withColumn("bprev", coalesce(sum(col("btot")).over(wB), lit(0L)))
-        .select(col("bucket"), col("bprev"))
-      inner.join(broadcast(bpre), "bucket")
-        .withColumn("tok_offset", col("bprev") + col("local_prev"))
+      Prefix(docs, within = Nil, buckets = Seq(Prefix.asc("bucket")),
+          order = Seq(col("doc_id")),
+          measures = Seq(Prefix.Sum("tok_offset", col("n_tokens"))), inclusive = false)
         .select(col("doc_id"), col("n_tokens"), col("tok_offset"),
           expr("tok_offset div 512").as("start_win"),
           expr("(tok_offset + n_tokens - 1) div 512").as("end_win"))
@@ -617,13 +570,12 @@ object TextOps {
     // pos_z · (2·cumneg_below + neg_z), INTEGER to the end; the one
     // double division happens at the exit. Distribution shape: one
     // per-doc map pass, one groupBy(z) (map-side combined), and the
-    // cumulative negative count via the q_gini rangeBucket discipline —
-    // per-bucket windows for the bulk plus a prefix window over the tiny
-    // bucket frame; NO global single-partition row sort at any scale.
+    // cumulative negative count as an exclusive [[graft.operators.Prefix]]
+    // sum over rangeBucket(z) buckets; NO global single-partition row
+    // sort at any scale.
     // Products run in DECIMAL(19,0)×DECIMAL(19,0)→(38,0): at 100 TB
     // pos·cumneg exceeds 2^53 and a double sum would silently round.
     "q_auc" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
       val z = qualityLogitExpr
       // z > -13 always (the negative terms are bounded: punct/chars ≤ 1,
@@ -637,19 +589,15 @@ object TextOps {
         .agg(sum(when(col("ok"), 1L).otherwise(0L)).as("pos_z"),
           sum(when(col("ok"), 0L).otherwise(1L)).as("neg_z"))
         .withColumn("rb", Num.rangeBucket(col("z") + lit(16.0)))
+        // Prefix reads the histogram twice; lazy, each read re-runs the
+        // per-doc regexes (measured 3x slower at sf0.1), so persist it
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val wB = Window.orderBy(col("rb")).rowsBetween(Window.unboundedPreceding, -1)
-      val bpre = grouped.groupBy(col("rb")).agg(sum(col("neg_z")).as("bneg"))
-        .withColumn("bprev", coalesce(sum(col("bneg")).over(wB), lit(0L)))
-        .select(col("rb"), col("bprev"))
-      val wIn = Window.partitionBy(col("rb")).orderBy(col("z"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      grouped
-        .withColumn("cumloc", coalesce(sum(col("neg_z")).over(wIn), lit(0L)))
-        .join(broadcast(bpre), "rb")
+      Prefix(grouped, within = Nil, buckets = Seq(Prefix.asc("rb")),
+          order = Seq(col("z")),
+          measures = Seq(Prefix.Sum("cumneg", col("neg_z"))), inclusive = false)
         .select(col("pos_z"), col("neg_z"),
           (col("pos_z").cast(d19) *
-            (lit(2L) * (col("bprev") + col("cumloc")) + col("neg_z")).cast(d19))
+            (lit(2L) * col("cumneg") + col("neg_z")).cast(d19))
             .as("half2"))
         .agg(sum(col("pos_z")).as("n_pos"), sum(col("neg_z")).as("n_neg"),
           sum(col("half2")).as("s2"))
@@ -1383,17 +1331,8 @@ object TextOps {
     // tokenizer build starts from: type/token counts, hapax ratio (one-
     // occurrence words — high hapax = noisy corpus), and the Zipf
     // exponent from the closed-form OLS slope of log freq on log rank.
-    // The vocabulary rank over (count desc, word) is DISTRIBUTED with a
-    // TWO-LEVEL prefix decomposition (the q_stratified_split idiom with
-    // stratum = count): rank = (#types with larger count: exclusive
-    // prefix over the Heaps-tiny distinct-count histogram — the only
-    // one-partition window) + (#same-count types in smaller word-prefix
-    // buckets: per-count exclusive prefix over substring(w,1,2) buckets)
-    // + row_number inside the (count, word-prefix) bucket. The word
-    // prefix is a PREFIX of the tie-break key, so bucket-major order
-    // equals (c desc, w) exactly — and the hapax stratum (half the
-    // vocabulary at c=1) fans out over ~1.3k prefix buckets instead of
-    // one task's sort. Regression sums are per-term decimal-cast so the
+    // The vocabulary rank over (count desc, word) is [[rankedVocab]]'s
+    // distributed one. Regression sums are per-term decimal-cast so the
     // slope is order-independent despite the float logs. A natural
     // corpus fits slope ≈ −1.
     "q_zipf_fit" -> ((s, d) => {
@@ -1848,7 +1787,7 @@ object TextOps {
         |FROM ch ORDER BY doc_id, chunk_id""".stripMargin,
 
     // The oracle's single global window IS the semantics; the Spark side
-    // computes the same prefix sum distributed (bucketed two-pass scan).
+    // computes the same prefix sum with graft.operators.Prefix.
     "q_seq_pack" ->
       """WITH tk AS (SELECT doc_id,
         |       CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens
@@ -1913,7 +1852,7 @@ object TextOps {
          |FROM pscore ORDER BY doc_id""".stripMargin,
 
     // The oracle ranks with ONE window per language — the reference
-    // semantics the Spark side's two-level prefix decomposition must
+    // semantics the Spark side's graft.operators.Prefix rank must
     // equal exactly (rank key (nlp, doc_id); nlp = −logprob/n is the
     // pre-exp double, bit-identical across engines).
     "q_ppl_buckets" ->

@@ -87,18 +87,21 @@ class PlanSpec extends SparkSpec {
   }
 
   test("distributed-rank analytics never put row-scale data through a single-partition window") {
-    // q_gini / q_pareto_8020 / q_skyline / q_zipf_fit use the two-pass
-    // bucket-prefix rank (q_seq_pack idiom): the row-scale window must
-    // partition by the range bucket, and every GLOBAL (empty
-    // partitionSpec) window may consume only the bucket-level aggregate
-    // — the tiny table — never the dimension/vocabulary rows themselves.
+    // these use graft.operators.Prefix (q_match_att its own bucket
+    // carries): the row-scale window must partition by the bucket, and
+    // every GLOBAL (empty partitionSpec) window may consume only the
+    // bucket-level aggregate — the tiny table — never the
+    // dimension/vocabulary rows themselves.
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     Seq("q_gini" -> "rb", "q_pareto_8020" -> "rb",
         "q_skyline" -> "rb", "q_zipf_fit" -> "c",
         "q_vocab_coverage" -> "c",
         "q_auc" -> "rb", "q_ks_test" -> "rb",
-        "q_match_att" -> "rb").foreach { case (q, bucket) =>
+        "q_match_att" -> "rb", "q_seq_pack" -> "bucket",
+        "q_epoch_shuffle" -> "hb", "q_curriculum" -> "hb",
+        "q_stratified_split" -> "hb", "q_token_budget_mix" -> "hb",
+        "q_ppl_buckets" -> "fl", "q_dsir" -> "fl").foreach { case (q, bucket) =>
       val sp = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
       val wins = sp.collect { case w: WindowExec => w }
       assert(wins.exists(_.partitionSpec.nonEmpty),

@@ -40,28 +40,19 @@ class LifecycleSpec extends SparkSpec {
   private val leavesCache: Map[String, String] = Map(
     "q_ann_graph" -> "the per-round walk caches back the returned frame",
     "q_ann_recall_panel" -> "its graph leg is q_ann_graph, whose round caches stay",
-    "q_auc" -> "range-bucketed score histogram persisted for its two consumers",
+    "q_auc" -> ("the z histogram Prefix reads twice; lazy, each read re-runs the per-doc " +
+      "regexes: 0.74 -> 2.47 s at sf0.1"),
     "q_bpe_encode" -> "the word-count cache the merge loop and the encode both read",
     "q_coreset" -> "the vector table persisted across the greedy picks",
-    "q_curriculum" -> "band x bucket count table persisted for the prefix sum",
     "q_dedup_ngram_capped" -> "the capped n-gram table persisted for its consumers",
-    "q_dsir" -> "feature table and weight table persisted, two consumers each",
-    "q_epoch_shuffle" -> "tiny bucket aggregate persisted for its two consumers",
-    "q_gini" -> "range-bucketed supplier revenue persisted for the Lorenz prefix",
+    "q_dsir" -> ("the DISK_ONLY feature table the model and the weights read, and the " +
+      "weight table Prefix reads twice: lazy, 1.57 -> 2.16 s at sf0.1"),
     "q_isotonic_calibration" -> "the binned score table persisted for the PAV passes",
-    "q_ks_test" -> "range-bucketed value histogram persisted for both CDFs",
     "q_match_att" -> "treated and control strata persisted for the matching joins",
     "q_minhash_estimate" -> "the band candidate pairs persisted for the rerank",
-    "q_pareto_8020" -> "range-bucketed customer spend persisted for the prefix",
-    "q_ppl_buckets" -> "the floored perplexity table persisted for its consumers",
     "q_resample" -> "the hourly aggregate persisted for the gap fill",
     "q_resample_locf" -> "the hourly aggregate persisted for the carry-forward",
-    "q_skyline" -> "range-bucketed group minima persisted for the dominance prefix",
-    "q_stratified_split" -> "lang x bucket count table persisted for the prefix sum",
-    "q_token_budget_mix" -> "source x bucket size table persisted for the prefix sum",
-    "q_vocab_coverage" -> "rankedVocab's vocabulary and rank caches",
-    "q_winnowing" -> "its output cache (see eagerAtBuild)",
-    "q_zipf_fit" -> "rankedVocab's vocabulary and rank caches")
+    "q_winnowing" -> "its output cache (see eagerAtBuild)")
 
   private def release(): Unit = {
     spark.sharedState.cacheManager.clearCache()
